@@ -1,8 +1,11 @@
 package graft.operators
 
+import graft.Schemas
 import graft.ml.SentimentScorer
 import graft.sources.ReviewIngest
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.net.URI
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline wiring (SURVEY.md §3.1-3.2): the whole reference
@@ -10,10 +13,13 @@ import org.apache.spark.sql.functions._
   * enrichment → SentimentResults sink → mark-processed — as one Spark job
   * graph instead of two Azure Functions + ADF + two SQL databases.
   *
-  * Contracts upgraded on purpose (SURVEY.md §2.10): the enrich step is
-  * atomic over its run (results write + flag rewrite from one computed set),
-  * where the reference commits them separately and can double-process on a
-  * crash between the two (FunctionApp2/process_data/__init__.py:96-104).
+  * Like the reference, enrich commits its results and its processed flags
+  * separately (FunctionApp2/process_data/__init__.py:96-104), so a crash
+  * leaves one of two windows open:
+  *  - after the results land and before the flags do, the next call scores
+  *    those rows again and appends duplicate results;
+  *  - after the rewritten silver files land and before their originals are
+  *    deleted, silver holds each of those ids twice (once still pending).
   */
 object Orchestration {
 
@@ -36,100 +42,86 @@ object Orchestration {
   def ingestToBronze(spark: SparkSession, rawPath: String, layout: Layout): Unit =
     ReviewIngest.writeBronze(ReviewIngest.ingest(spark, rawPath), layout.bronze)
 
-  /** Silver build (S7): bronze → SourceTable(id, text_column, processed). */
-  def buildSilver(spark: SparkSession, layout: Layout): Unit =
-    ReviewIngest.toSilver(spark.read.parquet(layout.bronze))
-      .write.mode("overwrite").parquet(layout.silver)
+  /** Silver build (S7): bronze → SourceTable(id, text_column, processed).
+    * The first build is a plain write; a later one appends only the ids
+    * silver lacks, so rows already scored keep `processed = 1`. */
+  def buildSilver(spark: SparkSession, layout: Layout): Unit = {
+    val reviews = ReviewIngest.toSilver(spark.read.parquet(layout.bronze))
+    if (!fileSystem(spark, layout).exists(new Path(layout.silver))) reviews.write.parquet(layout.silver)
+    else reviews.join(readSilver(spark, layout.silver).select("id"), Seq("id"), "left_anti")
+      .write.mode("append").parquet(layout.silver)
+  }
 
-  /** Enrich stage (§3.2): the reference's main query path.
+  /** Enrich stage (§3.2): the reference's main query path, in two Spark jobs.
     *
     * - P2+P1: `filter(processed === 0).select(id, text_column)`
-    * - P6: `isEmpty` short-circuit (O(1 partition), not a count)
     * - M1/M3: scorer produces (record_id, sentiment, confidence)
-    * - S6: batched append of results (vs row-at-a-time INSERT)
-    * - J1: mark-processed as a join-based flag rewrite + partition overwrite
+    * - S6: batched append of results (vs row-at-a-time INSERT); the write
+    *   observes the pending row count and the silver files holding them
+    * - P6: an observed count of 0 publishes nothing ("No new data")
+    * - J1: only those silver files are rewritten, with `processed = 1`;
+    *   the rest of silver is not touched
     *
     * Returns the number of records enriched (T5/G2 status count — the only
     * value the driver ever collects; row data never leaves the executors).
     */
   def enrich(spark: SparkSession, layout: Layout, scorer: SentimentScorer): Long = {
-    val silver = spark.read.parquet(layout.silver)
-    val pending = silver
+    val fs = fileSystem(spark, layout)
+    val seen = Observation()
+    val pending = readSilver(spark, layout.silver)
       .filter(col("processed") === 0)
-      .select(col("id"), col("text_column"))
-    // one action answers both P6 (empty short-circuit) and G2 (this run's
-    // status count — the reference's len(results), __init__.py:106): the
-    // count is needed for every non-empty run anyway, so a separate isEmpty
-    // probe would only add a job
-    val enrichedNow = pending.count()
-    if (enrichedNow == 0L) return 0L // P6: "No new data"
-
+      .select(col("id"), col("text_column"), col("_metadata.file_path").as("file"))
+      .observe(seen, count(lit(1)).as("rows"), collect_set(col("file")).as("files"))
     val scored = scorer.score(
       pending.select(col("id").cast("string").as("record_id"), col("text_column").as("text")))
       .select(col("record_id"), col("sentiment"), col("confidence"))
-    scored.write.mode("append").parquet(layout.results)
+    // staged, because an empty write still leaves a schema-only part file
+    val resultsStaging = new Path(s"${layout.results}__staging")
+    scored.write.mode("overwrite").parquet(resultsStaging.toString)
+    val m = seen.get
+    val enrichedNow = m("rows").asInstanceOf[Long]
+    if (enrichedNow == 0L) {
+      fs.delete(resultsStaging, true)
+      return 0L
+    }
+    publish(fs, resultsStaging, new Path(layout.results))
 
-    val done = spark.read.parquet(layout.results)
-      .select(col("record_id").cast("long").as("id")).distinct()
-    val updated = Pipeline.markProcessed(silver, done)
-    // overwrite via a staging dir: reading and overwriting the same parquet
-    // path in one job is undefined
-    val staging = s"${layout.silver}__staging"
-    updated.write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging).write.mode("overwrite").parquet(layout.silver)
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    stagingPath.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(stagingPath, true)
-
+    // _metadata.file_path is a URI string: a space in the root reads %20
+    val pendingFiles = m("files").asInstanceOf[Seq[String]].map(f => new Path(new URI(f)))
+    val silverStaging = new Path(s"${layout.silver}__staging")
+    // each row of those files is scored by now: its pending rows just were
+    readSilver(spark, pendingFiles.map(_.toString): _*).withColumn("processed", lit(1))
+      .write.mode("overwrite").parquet(silverStaging.toString)
+    publish(fs, silverStaging, new Path(layout.silver))
+    pendingFiles.foreach(fs.delete(_, false))
     enrichedNow
   }
 
-  /** Full run. Returns total enriched-record count. */
+  /** Full run. Returns total enriched-record count; a re-run on the same
+    * input enriches nothing new. */
   def run(spark: SparkSession, rawPath: String, layout: Layout, scorer: SentimentScorer): Long = {
     ingestToBronze(spark, rawPath, layout)
     buildSilver(spark, layout)
     enrich(spark, layout, scorer)
   }
 
-  /** J1 at scale: partition-level incremental mark-processed. The silver
-    * table is laid out `partitionBy("processed")`; marking rows processed
-    * touches exactly two partitions — append the newly-scored rows under
-    * `processed=1`, dynamically overwrite `processed=0` with whatever is
-    * still pending — instead of rewriting the whole table (which
-    * [[enrich]]'s staging rewrite does, fine at small scale, quadratic
-    * over a long-lived 100 TB table).
-    *
-    * Ordering gives crash-safety equivalent to the reference's intent
-    * without its duplicate window: the `processed=1` append is idempotent
-    * to re-run (downstream dedups on id), and the pending-partition
-    * overwrite happens last, so a crash in between re-processes nothing
-    * (rows are only removed from pending AFTER they exist as processed).
-    * The pre-write materialization here is a `localCheckpoint` (fits the
-    * pending delta in cluster memory); at larger deltas swap it for a
-    * staging-dir write — the ordering contract is unchanged.
-    */
-  def markProcessedPartitioned(spark: SparkSession, silverDir: String,
-                               doneIds: DataFrame): Unit = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val silver = spark.read.parquet(silverDir)
-    val pending = silver.filter(col("processed") === 0).drop("processed")
-    val ids = doneIds.select(col("id").as("done_id")).distinct()
-    // materialize both sides BEFORE any write: their plans read the very
-    // files the pending-partition overwrite replaces
-    val newlyDone = pending.join(broadcast(ids), pending("id") === col("done_id"), "left_semi")
-      .localCheckpoint(true)
-    val stillPending = pending.join(broadcast(ids), pending("id") === col("done_id"), "left_anti")
-      .localCheckpoint(true)
-    newlyDone.withColumn("processed", lit(1))
-      .write.mode("append").partitionBy("processed").parquet(silverDir)
-    if (stillPending.isEmpty)
-      // dynamic overwrite writes nothing for an empty frame, which would
-      // leave the done rows lingering in processed=0 — clear it explicitly
-      stillPending.write.mode("overwrite").parquet(s"$silverDir/processed=0")
-    else
-      // dynamic mode replaces only the partitions present in the written data
-      stillPending.withColumn("processed", lit(0))
-        .write.mode("overwrite").partitionBy("processed").parquet(silverDir)
-    spark.catalog.refreshByPath(silverDir)
+  /** Silver with its declared schema: no inference job per read. */
+  private def readSilver(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(Schemas.sourceTableSchema).parquet(paths: _*)
+
+  private def fileSystem(spark: SparkSession, layout: Layout): FileSystem =
+    new Path(layout.root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Moves the part files of a finished write in `staging` into `target`,
+    * then drops `staging`. Spark names part files by write job, so a moved
+    * file never replaces one already in `target`. */
+  private def publish(fs: FileSystem, staging: Path, target: Path): Unit = {
+    fs.mkdirs(target)
+    fs.listStatus(staging, (p: Path) => p.getName.startsWith("part-")).foreach { st =>
+      val to = new Path(target, st.getPath.getName)
+      require(fs.rename(st.getPath, to), s"could not move ${st.getPath} to $to")
+    }
+    fs.delete(staging, true)
   }
 
   /** Observed pipeline metrics (`q_observed_metrics`): the production run's
@@ -146,7 +138,7 @@ object Orchestration {
     * returns to the driver by design — it replaces a driver-side second
     * aggregation, not a distributed result). */
   def observedMetrics(spark: SparkSession, d: String): DataFrame = {
-    val obs = org.apache.spark.sql.Observation()
+    val obs = Observation()
     Pipeline.silverBuild(spark, d)
       .observe(obs,
         count(lit(1)).as("n_rows"),

@@ -2,36 +2,12 @@ package graft
 
 import graft.ml.BatchedScorer
 import graft.ml.BatchedScorer.{Doc, Scored}
-import graft.operators.Orchestration
 import graft.sources.ReviewIngest
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
-/** Partition-level mark-processed, quarantine scoring, ragged page merge. */
+/** Quarantine scoring, ragged page merge. */
 class IncrementalSpec extends SparkSpec {
   import spark.implicits._
-
-  test("partitioned mark-processed touches partitions, preserves every row") {
-    val dir = Files.createTempDirectory("graft-incr").toString + "/silver"
-    (0L until 100L).map(i => (i, s"text $i")).toDF("id", "text_column")
-      .withColumn("processed", lit(0))
-      .write.partitionBy("processed").parquet(dir)
-
-    val done1 = (0L until 40L).toDF("id")
-    Orchestration.markProcessedPartitioned(spark, dir, done1)
-    val after1 = spark.read.parquet(dir)
-    assert(after1.count() === 100L)
-    assert(after1.filter(col("processed") === 1).count() === 40L)
-    assert(after1.filter(col("processed") === 0).count() === 60L)
-
-    // second increment marks the rest; pending partition must end EMPTY
-    val done2 = (40L until 100L).toDF("id")
-    Orchestration.markProcessedPartitioned(spark, dir, done2)
-    val after2 = spark.read.parquet(dir)
-    assert(after2.count() === 100L)
-    assert(after2.filter(col("processed") === 0).count() === 0L)
-    assert(after2.select("id").distinct().count() === 100L, "rows lost or duplicated")
-  }
 
   test("quarantine mode: poison batch yields error rows, not a failed job") {
     val docs = (1 to 25).map(i => Doc(i.toString, if (i == 13) "POISON" else s"t$i"))
