@@ -27,13 +27,13 @@ object SparkEntry {
     "q_mark_processed" -> (Pipeline.markProcessedState _),
     "q_processed_by_source" -> (Pipeline.processedBySource _),
     "q_ingest_reviews" -> ((s, _) =>
-      graft.sources.ReviewIngest.ingest(s, "/root/reference/sample.json")
+      graft.sources.ReviewIngest.ingest(s, graft.sources.ReviewIngest.samplePath)
         .select(col("review_id"), col("hotel_id"), col("languagecode"),
           col("countrycode"), col("average_score"), col("review_ts"),
           col("hotelier_response_ts"), col("author.type").as("author_type"))),
     "q_review_page" -> ((s, _) =>
       graft.sources.ReviewIngest.pageQuery(
-        graft.sources.ReviewIngest.ingest(s, "/root/reference/sample.json"))),
+        graft.sources.ReviewIngest.ingest(s, graft.sources.ReviewIngest.samplePath))),
     // -- projections / filters / scalar transforms (§2.2-2.3) ------------
     "q_filter_project" -> (Relational.filterProject _),
     "q_filter_in" -> (Relational.filterInList _),
@@ -1199,12 +1199,12 @@ object SparkEntry {
         |len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS cjk
         |FROM documents) GROUP BY 1, 2""".stripMargin,
     "q_ingest_reviews" ->
-      """SELECT r.review_id, r.hotel_id, r.languagecode, r.countrycode,
+      s"""SELECT r.review_id, r.hotel_id, r.languagecode, r.countrycode,
         |r.average_score, r."date" AS review_ts,
         |epoch_ms(r.hotelier_response_date * 1000) AS hotelier_response_ts,
         |r.author.type AS author_type
         |FROM (SELECT unnest(result) AS r
-        |FROM read_json_auto('/root/reference/sample.json', maximum_object_size = 10000000))""".stripMargin,
+        |FROM read_json_auto('${graft.sources.ReviewIngest.samplePath}', maximum_object_size = 10000000))""".stripMargin,
     "q_rolling_hash" ->
       """SELECT doc_id,
         |list_reduce([CAST(0 AS BIGINT)] || list_transform(string_split(text, ''),
@@ -1550,11 +1550,11 @@ object SparkEntry {
         |AND a.vec_id < 500 AND b.vec_id < 500
         |AND list_cosine_similarity(a.embedding, b.embedding) >= 0.35""".stripMargin,
     "q_review_page" ->
-      """SELECT r.review_id, r.languagecode, r.author.type AS author_type,
+      s"""SELECT r.review_id, r.languagecode, r.author.type AS author_type,
         |CAST(r.helpful_vote_count AS INT) AS helpful_vote_count,
         |r."date" AS review_ts
         |FROM (SELECT unnest(result) AS r
-        |FROM read_json_auto('/root/reference/sample.json', maximum_object_size = 10000000))
+        |FROM read_json_auto('${graft.sources.ReviewIngest.samplePath}', maximum_object_size = 10000000))
         |WHERE r.hotel_id = 1676161
         |AND r.languagecode IN ('en-gb', 'de', 'fr')
         |AND r.author.type IN ('solo_traveller', 'review_category_group_of_friends')

@@ -1,6 +1,8 @@
 package graft.sources
 
 import graft.Schemas
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.security.MessageDigest
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -119,4 +121,30 @@ object ReviewIngest {
       col("review_id").as("id"),
       concat_ws(". ", col("title"), col("pros"), col("cons")).as("text_column"),
       lit(0).as("processed"))
+
+  /** Absolute path of the 25-review golden fixture, the classpath resource
+    * `reviews/sample.json`, so Spark and DuckDB open it from any working
+    * directory. A resource inside a jar (as `sbt run` sees it) is copied
+    * once to the temp dir under a name keyed by its content, and kept: the
+    * DuckDB oracle opens the path after this JVM exits. The file is a
+    * reconstruction of the reference's captured API response from the
+    * witness values SURVEY.md §1.2 cites (FIXTURES.md §1), written by
+    * `tools/make_review_fixture.py`. */
+  lazy val samplePath: String = {
+    val url = Option(getClass.getResource("/reviews/sample.json"))
+      .getOrElse(throw new IllegalStateException("reviews/sample.json is not on the classpath"))
+    if (url.getProtocol == "file") Paths.get(url.toURI).toString
+    else {
+      val in = url.openStream()
+      val bytes = try in.readAllBytes() finally in.close()
+      val key = MessageDigest.getInstance("SHA-256").digest(bytes).take(8).map("%02x".format(_)).mkString
+      val out = Paths.get(System.getProperty("java.io.tmpdir"), s"graft-review-sample-$key.json")
+      if (!Files.exists(out)) {
+        val part = Files.createTempFile(out.getParent, "graft-review-sample", ".part")
+        Files.write(part, bytes)
+        Files.move(part, out, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+      }
+      out.toString
+    }
+  }
 }

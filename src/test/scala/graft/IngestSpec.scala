@@ -3,10 +3,13 @@ package graft
 import graft.sources.ReviewIngest
 import org.apache.spark.sql.functions._
 
-/** Golden-fixture ingest tests against the reference's captured API response
-  * (/root/reference/sample.json — SURVEY.md §5.1). */
+/** Golden-fixture ingest tests (SURVEY.md §5.1) on `ReviewIngest.samplePath`,
+  * a reconstruction of the reference's captured API response from the
+  * witness values SURVEY.md §1.2 cites (FIXTURES.md §1), not the capture
+  * itself. The `sample.json:N` line numbers in the test names cite the
+  * capture's witness lines. */
 class IngestSpec extends SparkSpec {
-  private val samplePath = "/root/reference/sample.json"
+  private val samplePath = ReviewIngest.samplePath
   private lazy val reviews = ReviewIngest.ingest(spark, samplePath).cache()
 
   test("envelope explodes to exactly 25 reviews (sample.json:2 count)") {

@@ -4,9 +4,14 @@ import graft.sources.ReviewIngest
 import org.apache.spark.sql.functions._
 
 /** The reference's ingest-side query (P3/P4/P5 + O1/O2) on the golden
-  * fixture. */
+  * fixture `ReviewIngest.samplePath`, a reconstruction of the reference's
+  * captured API response from the witness values SURVEY.md §1.2 cites
+  * (FIXTURES.md §1). Its languages and author types include values outside
+  * the query's lists, and 7 of its 25 reviews match with 6 distinct
+  * helpful-vote counts, so the predicate, order and page-size checks are
+  * not vacuous. */
 class PageQuerySpec extends SparkSpec {
-  private lazy val reviews = ReviewIngest.ingest(spark, "/root/reference/sample.json")
+  private lazy val reviews = ReviewIngest.ingest(spark, ReviewIngest.samplePath)
 
   test("page query applies all three predicate classes") {
     val page = ReviewIngest.pageQuery(reviews).collect()
