@@ -1204,7 +1204,7 @@ object SparkEntry {
         |epoch_ms(r.hotelier_response_date * 1000) AS hotelier_response_ts,
         |r.author.type AS author_type
         |FROM (SELECT unnest(result) AS r
-        |FROM read_json_auto('${graft.sources.ReviewIngest.samplePath}', maximum_object_size = 10000000))""".stripMargin,
+        |FROM read_json_auto(${graft.sources.ReviewIngest.samplePathSqlLiteral}, maximum_object_size = 10000000))""".stripMargin,
     "q_rolling_hash" ->
       """SELECT doc_id,
         |list_reduce([CAST(0 AS BIGINT)] || list_transform(string_split(text, ''),
@@ -1554,7 +1554,7 @@ object SparkEntry {
         |CAST(r.helpful_vote_count AS INT) AS helpful_vote_count,
         |r."date" AS review_ts
         |FROM (SELECT unnest(result) AS r
-        |FROM read_json_auto('${graft.sources.ReviewIngest.samplePath}', maximum_object_size = 10000000))
+        |FROM read_json_auto(${graft.sources.ReviewIngest.samplePathSqlLiteral}, maximum_object_size = 10000000))
         |WHERE r.hotel_id = 1676161
         |AND r.languagecode IN ('en-gb', 'de', 'fr')
         |AND r.author.type IN ('solo_traveller', 'review_category_group_of_friends')

@@ -124,12 +124,13 @@ object ReviewIngest {
 
   /** Absolute path of the 25-review golden fixture, the classpath resource
     * `reviews/sample.json`, so Spark and DuckDB open it from any working
-    * directory. A resource inside a jar (as `sbt run` sees it) is copied
-    * once to the temp dir under a name keyed by its content, and kept: the
-    * DuckDB oracle opens the path after this JVM exits. The file is a
-    * reconstruction of the reference's captured API response from the
-    * witness values SURVEY.md §1.2 cites (FIXTURES.md §1), written by
-    * `tools/make_review_fixture.py`. */
+    * directory. Forked `sbt test` loads it from the classes directory; forked
+    * `sbt run`/`runMain` loads it from the packaged jar sbt copies under
+    * `target/bg-jobs/` and deletes on exit, so there it is copied once to the
+    * temp dir under a name keyed by its content, and kept: the DuckDB oracle
+    * opens the path after this JVM exits. The file is a reconstruction of the
+    * reference's captured API response from the witness values SURVEY.md
+    * §1.2 cites (FIXTURES.md §1), written by `tools/make_review_fixture.py`. */
   lazy val samplePath: String = {
     val url = Option(getClass.getResource("/reviews/sample.json"))
       .getOrElse(throw new IllegalStateException("reviews/sample.json is not on the classpath"))
@@ -147,4 +148,8 @@ object ReviewIngest {
       out.toString
     }
   }
+
+  /** `samplePath` as a single-quoted SQL string literal, for the DuckDB
+    * oracle's `read_json_auto`. */
+  def samplePathSqlLiteral: String = "'" + samplePath.replace("'", "''") + "'"
 }
