@@ -41,23 +41,11 @@ import org.apache.spark.sql.SparkSession
   * but fails its retime keeps the pass-1 timing and is listed in `flaky`
   * (ADVICE r04: silent pass-2 failures under-reported nondeterminism).
   *
-  * Slow-window-proofing (round 16, verdict #1): round 15's driver window
-  * ran every build/drain 1.7-2× slow — the 83 s warmup ate pass 1's margin
-  * and 21 cheap-tail queries were skipped. The warmup is all one-off
-  * corpus builds (pure functions of the corpus bytes), so Bench enables
-  * [[graft.operators.StageCache]]: every staged artifact — IVF/PQ index,
-  * cluster labels, shingle frames, graph edges, drained stream sinks, the
-  * sentiment model — persists to `bench_cache/` keyed on a CONTENT
-  * fingerprint of the corpus dir, and a host pays the builds once EVER,
-  * not once per run. On a warm cache the warmup is parquet loads
-  * (seconds), so even a 2× window leaves pass 1 the whole budget; the
-  * first run on a new corpus writes the cache through as a side effect of
-  * the builds it was already doing, so a watchdog-halted miss run still
-  * warms the next attempt. The artifact reports `stage_cache` hit/miss
-  * lists so a regression in staging cost is attributable. Verify and the
-  * suite never enable the cache — the correctness gate always runs the
-  * builders end-to-end. BenchBudgetSpec red-lights any committed registry
-  * whose projection would skip pass-1 coverage at 2× warmup drift.
+  * The warmup builds every corpus artifact (indexes, cluster labels,
+  * shingle frames, graph edges, drained stream sinks, the sentiment model)
+  * on each run, so `warmup_s` and the `builds`/`drains` maps are real build
+  * costs. BenchBudgetSpec red-lights any committed registry whose
+  * projection would skip pass-1 coverage at 2× warmup drift.
   */
 object Bench {
 
@@ -67,13 +55,6 @@ object Bench {
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "330").toDouble
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // On-disk staging cache (see the scaladoc). Opt out with
-    // SPARK_GRAFT_STAGE_CACHE=off (the cold-path measurement mode); any
-    // other value overrides the cache dir. cwd-relative default so the
-    // driver's sbt runs and local runs share one cache under the repo.
-    val stageCacheDir = sys.env.getOrElse("SPARK_GRAFT_STAGE_CACHE", "bench_cache")
-    if (stageCacheDir != "off" && stageCacheDir != "0")
-      operators.StageCache.enable(stageCacheDir)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -160,15 +141,7 @@ object Bench {
       }
       val staged = arr(ordered.collect {
         case (n, _) if n.startsWith("q_stream_") => n }.toList ::: List("q_edit_distance"))
-      // `stage_cache`: which staged artifacts loaded from the on-disk cache
-      // (hits) vs built+written-through this run (misses) — on a hit-heavy
-      // run the `builds`/`drains` walls are parquet-load costs, not build
-      // costs, and a staging regression is attributable to the miss list.
-      import scala.jdk.CollectionConverters._
-      val cacheJson = s"""{"enabled":${operators.StageCache.isEnabled},"hits":${
-        arr(operators.StageCache.hits.asScala.toList)},"misses":${
-        arr(operators.StageCache.misses.asScala.toList)}}"""
-      val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"drains":${cmap(drainSecs)},"builds":${cmap(buildSecs)},"staged":$staged,"stage_cache":$cacheJson,"warmup_s":${jnum(warmupSec, 1)},"wall_s":${jnum(elapsedSec, 1)},"failed":${arr(failed)},"flaky":${arr(flaky)},"skipped":${arr(allSkipped)},"sf":"$sfDir"}"""
+      val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"drains":${cmap(drainSecs)},"builds":${cmap(buildSecs)},"staged":$staged,"warmup_s":${jnum(warmupSec, 1)},"wall_s":${jnum(elapsedSec, 1)},"failed":${arr(failed)},"flaky":${arr(flaky)},"skipped":${arr(allSkipped)},"sf":"$sfDir"}"""
       println(line)
       System.out.flush()
       // ... and to a file (round-18 verdict #8): every BENCH_r*.json the

@@ -8,16 +8,15 @@ import org.apache.spark.sql.SparkSession
   * launches — `runMain graft.JobProf <sfDir> <q1,q2,...>`. A local-mode
   * iterated gate spends its wall on job-launch + broadcast-build overhead
   * that per-query totals can't attribute; this main shows exactly how many
-  * jobs a gate costs and what each one is. Evidence tooling like [[QTime]]
-  * — feeds no graded artifact, changes no contract. */
+  * jobs a gate costs and what each one is. The first run builds the
+  * corpus artifacts into the session memos, so the profiled second run
+  * shows only the gate's own jobs. Evidence tooling like [[QTime]] — feeds
+  * no graded artifact, changes no contract. */
 object JobProf {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val stageCacheDir = sys.env.getOrElse("SPARK_GRAFT_STAGE_CACHE", "bench_cache")
-    if (stageCacheDir != "off" && stageCacheDir != "0")
-      operators.StageCache.enable(stageCacheDir)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -7,18 +7,16 @@ import org.apache.spark.sql.SparkSession
   * `runMain graft.QTime <sfDir> <n> <q1,q2,...>`. Exists so a single-query
   * experiment costs seconds instead of a full 280 s Bench pass; the full
   * Bench artifact remains the graded measurement (this main is evidence
-  * tooling, not a bench-contract change). StageCache is enabled exactly as
-  * in Bench so staged artifacts load warm; the timed region computes from
-  * the parquet inputs the same way the bench's timed passes do. */
+  * tooling, not a bench-contract change). Nothing is cached across runs:
+  * the first timing of a query also pays its corpus-artifact builds, so
+  * read `best`, which like the bench's timed passes reads the session
+  * memos. */
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val n = args(1).toInt
     val names = args(2).split(",").toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val stageCacheDir = sys.env.getOrElse("SPARK_GRAFT_STAGE_CACHE", "bench_cache")
-    if (stageCacheDir != "off" && stageCacheDir != "0")
-      operators.StageCache.enable(stageCacheDir)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -178,36 +178,13 @@ object MlSentimentScorer {
   @volatile private var cached: PipelineModel = _
   private[ml] def cachedModel(scorer: MlSentimentScorer): PipelineModel = synchronized {
     if (cached == null) {
-      def fit(): PipelineModel = {
-        val tokenizer = new RegexTokenizer()
-          .setInputCol("text").setOutputCol("tokens").setPattern("\\W+")
-        val tf = new HashingTF()
-          .setInputCol("tokens").setOutputCol("features").setNumFeatures(1 << 12)
-        val lr = new LogisticRegression()
-          .setFamily("multinomial").setMaxIter(50).setRegParam(0.01)
-        new MlPipeline().setStages(Array(tokenizer, tf, lr)).fit(scorer.corpus)
-      }
-      // Disk layer (bench only — [[graft.operators.StageCache]]): the model
-      // is hermetic (fixed in-code corpus, deterministic LBFGS), so the
-      // [[save]]/[[loadScorer]] MLWriter contract doubles as a cross-run
-      // cache keyed only on the cache version salt. Disabled (the default:
-      // Verify, specs, library use) this is exactly the old fit.
-      import graft.operators.StageCache
-      cached = StageCache.modelSlot("sentiment-model") match {
-        case Some((dir, true)) =>
-          try { val m = PipelineModel.load(dir.getAbsolutePath); StageCache.modelLoaded("sentiment-model"); m }
-          catch { case e: Throwable =>
-            System.err.println(s"[stage-cache] sentiment-model load failed (${e.getMessage}); refitting")
-            fit()
-          }
-        case Some((dir, false)) =>
-          val m = fit()
-          try { m.write.overwrite().save(dir.getAbsolutePath); StageCache.modelSaved("sentiment-model") }
-          catch { case e: Throwable =>
-            System.err.println(s"[stage-cache] sentiment-model save failed: ${e.getMessage}") }
-          m
-        case None => fit()
-      }
+      val tokenizer = new RegexTokenizer()
+        .setInputCol("text").setOutputCol("tokens").setPattern("\\W+")
+      val tf = new HashingTF()
+        .setInputCol("tokens").setOutputCol("features").setNumFeatures(1 << 12)
+      val lr = new LogisticRegression()
+        .setFamily("multinomial").setMaxIter(50).setRegParam(0.01)
+      cached = new MlPipeline().setStages(Array(tokenizer, tf, lr)).fit(scorer.corpus)
     }
     cached
   }

@@ -455,7 +455,6 @@ object Corpus {
 
   def dsirFeatureArtifact(s: SparkSession, d: String): DataFrame =
     dsirCache.getOrCompute(s, d) {
-      StageCache.throughDf(s, d, "dsir-features") {
       Tables.documents(s, d)
         .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
         .filter(size(col("toks")) >= 2)
@@ -463,7 +462,7 @@ object Corpus {
           "transform(sequence(0, size(toks) - 2), " +
             "i -> substring(md5(concat(element_at(toks, i + 1), ' ', element_at(toks, i + 2))), 1, 4))"))
           .as("feat"))
-      }.persist()
+        .persist()
     }
 
   def dsirWeights(s: SparkSession, d: String): DataFrame = {
@@ -944,7 +943,6 @@ object Corpus {
 
   def sourceShingleArtifact(s: SparkSession, d: String, n: Int): DataFrame =
     sourceShingleCache.getOrCompute(s, (d, n)) {
-      StageCache.throughDf(s, d, s"source-shingle-$n") {
       val docs = Tables.documents(s, d)
       docs.select(col("source"), split(lower(col("text")), "\\s+").as("tokens"))
         // shorter than n tokens → no n-shingles (sequence(0, negative) is
@@ -954,7 +952,7 @@ object Corpus {
           expr(s"transform(sequence(0, size(tokens) - $n), i -> xxhash64(concat_ws(' ', slice(tokens, i + 1, $n))))")
             .as("sh")).as("shingle"))
         .distinct()
-      }.persist()
+        .persist()
     }
 
   /** Cross-source overlap matrix: for every source pair, how many distinct

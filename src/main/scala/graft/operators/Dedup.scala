@@ -125,11 +125,8 @@ object Dedup {
 
   def shingleArtifacts(s: SparkSession, d: String): (DataFrame, DataFrame) =
     shingleCache.getOrCompute(s, d) {
-      val (sh, sig) = StageCache.through2(s, d, "shingle-artifacts") {
-        val sh = shingles(Tables.documents(s, d)).persist()
-        (sh, minhashSignatures(sh))
-      }
-      (sh.persist(), sig.persist())
+      val sh = shingles(Tables.documents(s, d)).persist()
+      (sh, minhashSignatures(sh).persist())
     }
 
   /** Wide (passage-width) shingle frames under the same contract, keyed by
@@ -141,9 +138,7 @@ object Dedup {
 
   def passageShingleArtifact(s: SparkSession, d: String, n: Int): DataFrame =
     passageCache.getOrCompute(s, (d, n)) {
-      StageCache.throughDf(s, d, s"passage-shingle-$n") {
-        shingles(Tables.documents(s, d), n)
-      }.persist()
+      shingles(Tables.documents(s, d), n).persist()
     }
 
   /** D2 end-to-end (hand-rolled MinHash+LSH): near-dup pairs above a Jaccard
@@ -311,15 +306,12 @@ object Dedup {
   def containmentArtifacts(s: SparkSession, d: String,
                            maxShingleDf: Long = 50): (DataFrame, DataFrame) =
     containmentCache.getOrCompute(s, (d, maxShingleDf)) {
-      val (pruned, sizes) = StageCache.through2(s, d, s"containment-$maxShingleDf") {
-        val (sh, _) = shingleArtifacts(s, d)
-        val dfs = sh.groupBy(col("shingle")).agg(count(lit(1)).as("sdf"))
-          .filter(col("sdf") >= 2 && col("sdf") <= maxShingleDf)
-          .select(col("shingle"))
-        val pruned = sh.join(dfs, Seq("shingle")).persist()
-        (pruned, pruned.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")))
-      }
-      (pruned.persist(), sizes.persist())
+      val (sh, _) = shingleArtifacts(s, d)
+      val dfs = sh.groupBy(col("shingle")).agg(count(lit(1)).as("sdf"))
+        .filter(col("sdf") >= 2 && col("sdf") <= maxShingleDf)
+        .select(col("shingle"))
+      val pruned = sh.join(dfs, Seq("shingle")).persist()
+      (pruned, pruned.groupBy(col("doc_id")).agg(count(lit(1)).as("sz")).persist())
     }
 
   def containmentPairsAtScale(s: SparkSession, d: String,
@@ -369,8 +361,7 @@ object Dedup {
 
   def ccPairArtifact(s: SparkSession, d: String): DataFrame =
     ccPairCache.getOrCompute(s, d) {
-      StageCache.throughDf(s, d, "cc-pairs")(ngramJaccardPairs(s, d))
-        .localCheckpoint(true)
+      ngramJaccardPairs(s, d).localCheckpoint(true)
     }
 
   /** The doc<200 sibling of [[ccPairArtifact]], input of the `q_triangles`
@@ -385,8 +376,7 @@ object Dedup {
 
   def triPairArtifact(s: SparkSession, d: String): DataFrame =
     triPairCache.getOrCompute(s, d) {
-      StageCache.throughDf(s, d, "tri-pairs")(ngramJaccardPairs(s, d, maxDocId = 200))
-        .localCheckpoint(true)
+      ngramJaccardPairs(s, d, maxDocId = 200).localCheckpoint(true)
     }
 
   def recursiveClusters(s: SparkSession, d: String, maxDepth: Int = 6): DataFrame = {
@@ -499,9 +489,7 @@ object Dedup {
 
   def edTruthArtifact(s: SparkSession, d: String, maxDocId: Long = 300): DataFrame =
     edTruthCache.getOrCompute(s, (d, maxDocId)) {
-      val t = StageCache.throughDf(s, d, s"ed-truth-$maxDocId") {
-        editDistancePairs(s, d, maxDocId = maxDocId)
-      }.cache()
+      val t = editDistancePairs(s, d, maxDocId = maxDocId).cache()
       t.count() // materialize: the artifact contract, not lazy lineage
       t
     }
@@ -623,9 +611,7 @@ object Dedup {
 
   def jaccardTruthArtifact(s: SparkSession, d: String, maxDocId: Long = 500): DataFrame =
     jaccardTruthCache.getOrCompute(s, (d, maxDocId)) {
-      val t = StageCache.throughDf(s, d, s"jaccard-truth-$maxDocId") {
-        exactShingleJaccardPairs(s, d, maxDocId)
-      }.cache()
+      val t = exactShingleJaccardPairs(s, d, maxDocId).cache()
       t.count() // materialize: the artifact contract, not lazy lineage
       t
     }
@@ -847,9 +833,7 @@ object Dedup {
 
   def clusterLabels(s: SparkSession, d: String): DataFrame =
     labelCache.getOrCompute(s, d) {
-      StageCache.throughDf(s, d, "cluster-labels") {
-        nearDupClusters(ngramJaccardPairs(s, d, threshold = 0.05))
-      }.cache()
+      nearDupClusters(ngramJaccardPairs(s, d, threshold = 0.05)).cache()
     }
 
   /** Registered: cluster summary over the exact bounded n-gram pairs. */
@@ -868,9 +852,7 @@ object Dedup {
 
   def clusterLabelsLsh(s: SparkSession, d: String): DataFrame =
     lshLabelCache.getOrCompute(s, d) {
-      StageCache.throughDf(s, d, "cluster-labels-lsh") {
-        nearDupClusters(nearDupPairs(s, d, 0.2))
-      }.cache()
+      nearDupClusters(nearDupPairs(s, d, 0.2)).cache()
     }
 
   /** Registered (rows-only; DedupSpec pins agreement with the exact bounded

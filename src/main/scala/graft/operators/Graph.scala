@@ -62,35 +62,18 @@ object Graph {
     * once per graph query. */
   def graphArtifacts(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) =
     edgeCache.getOrCompute(s, d) {
-      val (norm0, nodes0, pairs0) = StageCache.through3(s, d, "graph-edges")(buildGraphArtifacts(s, d))
-      // Pin the src hash-partitioning INTO the persisted norm frame (round-18
-      // optimization, COMPLETED round 19): on a StageCache HIT the artifact
-      // is a plain parquet read with UnknownPartitioning, so the "persisted
-      // norm keeps its src partitioning" premise the PageRank loop relies on
-      // silently failed on exactly the warm path the bench runs — every
-      // power iteration re-shuffled the FULL |E| edge frame (~2.2M rows at
-      // sf0.1, ×5 iterations) instead of only the |V|-row ranks side (guide
-      // §2.4: remove shuffles outright / §2.1: the join's exchange must move
-      // the small side). Round 19: `persist()` was NOT enough — an
+      val (norm0, nodes0, pairs0) = buildGraphArtifacts(s, d)
+      // Pin the src hash-partitioning INTO the norm frame, so the PageRank
+      // loop join re-shuffles only the |V|-row ranks side, not the |E| edge
+      // frame, in every iteration. `persist()` is not enough: an
       // InMemoryRelation caching an AdaptiveSparkPlan reports Unknown
-      // partitioning to consumers, so the r18 repartition+persist STILL
-      // re-exchanged (and re-sorted) norm inside every iteration
-      // (plans/r19/q_pagerank_before.txt: Exchange+Sort above the
-      // InMemoryTableScan in all 5 iterations). `localCheckpoint` pins the
-      // layout in a LogicalRDD, which DOES expose outputPartitioning —
-      // after-plan shows the loop join exchange-free on the edge side.
-      // Width = [[GatePartitions]], the same state-sized count the
-      // iteration scope runs under. The checkpoint blocks live for the
-      // session (the eviction hook's unpersist is a no-op on them) — the
-      // same lifetime the triClusterLabels artifact already has.
-      // AQE is scoped OFF for this one materialization: under AQE the
-      // executed plan is an AdaptiveSparkPlan whose outputPartitioning is
-      // Unknown at checkpoint-capture time, so the LogicalRDD STILL dumped
-      // UnknownPartitioning(0) and the loop re-exchanged norm (observed in
-      // plans/r19/q_pagerank_after dump iteration 1). With AQE off the
-      // exchange tree reports hashpartitioning(src, GatePartitions) and the
-      // checkpoint pins it. Rows are identical either way (repartition is
-      // a layout op); AQE stays on for everything else.
+      // partitioning to its consumers (plans/r19/q_pagerank_before.txt:
+      // Exchange+Sort above the InMemoryTableScan in all 5 iterations).
+      // `localCheckpoint` pins the layout in a LogicalRDD, which exposes
+      // outputPartitioning, and AQE is scoped off for this one
+      // materialization because under AQE the layout is still Unknown at
+      // checkpoint-capture time. Width = [[GatePartitions]]; rows are the
+      // same either way, and the checkpoint blocks live for the session.
       val pinnedNorm = {
         val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
         s.conf.set("spark.sql.adaptive.enabled", "false")
@@ -568,9 +551,7 @@ object Graph {
 
   def triClusterLabels(s: SparkSession, d: String): DataFrame =
     triLabelCache.getOrCompute(s, d) {
-      StageCache.throughDf(s, d, "tri-cluster-labels") {
-        connectedComponentsStar(Dedup.triPairArtifact(s, d))
-      }.localCheckpoint(true)
+      connectedComponentsStar(Dedup.triPairArtifact(s, d)).localCheckpoint(true)
     }
 
   /** Whole-module corpus-replacement hook (round-12 ADVICE): drop the

@@ -137,10 +137,8 @@ object IvfIndex {
 
   def q8Index(s: SparkSession, d: String): DataFrame =
     q8Cache.getOrCompute(s, d) {
-      StageCache.throughDf(s, d, "ivf-q8") {
-        val (assigned, _) = index(s, d)
-        quantizeAssigned(assigned)
-      }.cache()
+      val (assigned, _) = index(s, d)
+      quantizeAssigned(assigned).cache()
     }
 
   // ------------------------------------------------ Product quantization
@@ -262,15 +260,9 @@ object IvfIndex {
 
   def pqIndex(s: SparkSession, d: String): (DataFrame, DataFrame) =
     pqCache.getOrCompute(s, d) {
-      // StageCache.through2: identity passthrough unless the bench's
-      // on-disk staging cache is enabled — then the codebook/code tables
-      // read from (or write through to) the fingerprint-keyed parquet slot
-      val (cb, codes) = StageCache.through2(s, d, "ivf-pq") {
-        val (assigned, _) = index(s, d)
-        val cb = pqCodebooks(Tables.embeddings(s, d)).cache()
-        (cb, pqEncode(assigned, cb))
-      }
-      (cb.cache(), codes.cache())
+      val (assigned, _) = index(s, d)
+      val cb = pqCodebooks(Tables.embeddings(s, d)).cache()
+      (cb, pqEncode(assigned, cb).cache())
     }
 
   /** IVF+PQ probe, bound-oracled (`q_ann_ivf_pq`): the 51×-compressed ADC
@@ -382,13 +374,7 @@ object IvfIndex {
 
   def index(s: SparkSession, d: String): (DataFrame, DataFrame) =
     indexCache.getOrCompute(s, d) {
-      // the disk layer ([[StageCache]]) is the [[save]]/[[load]] contract
-      // made automatic for the bench: keyed on the corpus content
-      // fingerprint, a host pays the k-means build once ever, not once per
-      // run (round-15 verdict #1 — the 73 s driver-window build)
-      val (assigned, centroids) = StageCache.through2(s, d, "ivf-index") {
-        buildIndex(Tables.embeddings(s, d))
-      }
+      val (assigned, centroids) = buildIndex(Tables.embeddings(s, d))
       (assigned.cache(), centroids.cache())
     }
 

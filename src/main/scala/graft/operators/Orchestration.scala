@@ -5,6 +5,9 @@ import graft.ml.SentimentScorer
 import graft.sources.ReviewIngest
 import java.net.URI
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,13 +46,17 @@ object Orchestration {
     ReviewIngest.writeBronze(ReviewIngest.ingest(spark, rawPath), layout.bronze)
 
   /** Silver build (S7): bronze → SourceTable(id, text_column, processed).
-    * The first build is a plain write; a later one appends only the ids
+    * The first build writes every review; a later one adds only the ids
     * silver lacks, so rows already scored keep `processed = 1`. */
   def buildSilver(spark: SparkSession, layout: Layout): Unit = {
+    val fs = fileSystem(spark, layout)
     val reviews = ReviewIngest.toSilver(spark.read.parquet(layout.bronze))
-    if (!fileSystem(spark, layout).exists(new Path(layout.silver))) reviews.write.parquet(layout.silver)
-    else reviews.join(readSilver(spark, layout.silver).select("id"), Seq("id"), "left_anti")
-      .write.mode("append").parquet(layout.silver)
+    val fresh =
+      if (!fs.exists(new Path(layout.silver))) reviews
+      else reviews.join(readSilver(spark, layout.silver).select("id"), Seq("id"), "left_anti")
+    val staging = new Path(s"${layout.silver}__staging")
+    fresh.write.mode("overwrite").parquet(staging.toString)
+    publish(fs, staging, new Path(layout.silver))
   }
 
   /** Enrich stage (§3.2): the reference's main query path, in two Spark jobs.
@@ -75,16 +82,13 @@ object Orchestration {
     val scored = scorer.score(
       pending.select(col("id").cast("string").as("record_id"), col("text_column").as("text")))
       .select(col("record_id"), col("sentiment"), col("confidence"))
-    // staged, because an empty write still leaves a schema-only part file
+    // staged, so that `publish` drops the 0-row part files the writer keeps
     val resultsStaging = new Path(s"${layout.results}__staging")
     scored.write.mode("overwrite").parquet(resultsStaging.toString)
+    publish(fs, resultsStaging, new Path(layout.results))
     val m = seen.get
     val enrichedNow = m("rows").asInstanceOf[Long]
-    if (enrichedNow == 0L) {
-      fs.delete(resultsStaging, true)
-      return 0L
-    }
-    publish(fs, resultsStaging, new Path(layout.results))
+    if (enrichedNow == 0L) return 0L
 
     // _metadata.file_path is a URI string: a space in the root reads %20
     val pendingFiles = m("files").asInstanceOf[Seq[String]].map(f => new Path(new URI(f)))
@@ -113,13 +117,22 @@ object Orchestration {
     new Path(layout.root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Moves the part files of a finished write in `staging` into `target`,
-    * then drops `staging`. Spark names part files by write job, so a moved
+    * then drops `staging`. Spark's writer keeps partition 0's file even when
+    * it holds no rows, so a file whose parquet footer reports 0 rows is
+    * dropped with `staging`. Spark names part files by write job, so a moved
     * file never replaces one already in `target`. */
   private def publish(fs: FileSystem, staging: Path, target: Path): Unit = {
     fs.mkdirs(target)
+    // built from the file system's conf: ParquetFileReader's default options
+    // load a new Hadoop Configuration per file, about 10 ms each
+    val footerOptions = HadoopReadOptions.builder(fs.getConf).build()
     fs.listStatus(staging, (p: Path) => p.getName.startsWith("part-")).foreach { st =>
-      val to = new Path(target, st.getPath.getName)
-      require(fs.rename(st.getPath, to), s"could not move ${st.getPath} to $to")
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf), footerOptions)
+      val rows = try reader.getRecordCount finally reader.close()
+      if (rows > 0) {
+        val to = new Path(target, st.getPath.getName)
+        require(fs.rename(st.getPath, to), s"could not move ${st.getPath} to $to")
+      }
     }
     fs.delete(staging, true)
   }

@@ -243,15 +243,12 @@ object Similarity {
   def rpSigArtifacts(s: SparkSession, d: String,
                      tables: Int, bits: Int): (DataFrame, DataFrame) =
     rpSigCache.getOrCompute(s, (d, tables, bits)) {
-      val (sigs, normed) = StageCache.through2(s, d, s"rp-sig-$tables-$bits") {
-        val emb = Tables.embeddings(s, d)
-        val sigs = emb.select(
-          col("vec_id"),
-          posexplode(rpSignatures(col("embedding"), tables, bits)).as(Seq("t", "sig")))
-        val normed = emb
-          .select(col("vec_id"), col("embedding"), vecNorm(col("embedding")).as("nrm"))
-        (sigs, normed)
-      }
+      val emb = Tables.embeddings(s, d)
+      val sigs = emb.select(
+        col("vec_id"),
+        posexplode(rpSignatures(col("embedding"), tables, bits)).as(Seq("t", "sig")))
+      val normed = emb
+        .select(col("vec_id"), col("embedding"), vecNorm(col("embedding")).as("nrm"))
       (sigs.persist(), normed.persist())
     }
 

@@ -4,6 +4,8 @@ import graft.ml.LexiconScorer
 import graft.operators.Orchestration
 import graft.operators.Orchestration.Layout
 import graft.sources.ReviewIngest
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
@@ -122,6 +124,26 @@ class OrchestrationSpec extends SparkSpec {
     assert(silver.forall(_.getAs[Int]("processed") == 1))
     assert(!Files.exists(Path.of(s"${layout.silver}__staging")))
     assert(!Files.exists(Path.of(s"${layout.results}__staging")))
+  }
+
+  test("enrich publishes no 0-row results or silver file") {
+    val root = Files.createTempDirectory("graft-nonempty")
+    val layout = Layout(root.toString)
+    assert(Orchestration.run(spark, ReviewPages.write(root.resolve("pages-a"), 400).toString,
+      layout, LexiconScorer) === 400L)
+    // a timer tick: 50 new reviews land in bronze and silver, then enrich
+    val tick = ReviewPages.write(root.resolve("pages-b"), 50, firstId = 1000L)
+    assert(Orchestration.run(spark, tick.toString, layout, LexiconScorer) === 50L)
+    val conf = spark.sparkContext.hadoopConfiguration
+    Seq(layout.results, layout.silver).foreach { dir =>
+      val rows = parquetFiles(dir).keys.toSeq.map { f =>
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
+        try f.getFileName -> reader.getRecordCount finally reader.close()
+      }
+      assert(rows.nonEmpty && rows.forall(_._2 >= 1L), s"$dir footers: $rows")
+    }
+    assert(spark.read.parquet(layout.results).count() === 450L)
   }
 
   test("an enrich with nothing pending returns 0 and writes nothing") {

@@ -25,10 +25,16 @@ class PageQuerySpec extends SparkSpec {
     val page = ReviewIngest.pageQuery(reviews).collect()
     val votes = page.map(_.getAs[Int]("helpful_vote_count"))
     assert(votes.sameElements(votes.sortBy(v => -v)), "not sorted by helpful votes desc")
+    // the exact page: 5140076690 (2025-01-04) and 5139540968 (2024-12-02)
+    // tie at 2 votes, and recency puts the newer one first, ahead of the
+    // review_id tiebreak that would order them the other way round
+    assert(page.map(_.getAs[Long]("review_id")).toSeq === Seq(
+      5139735972L, 5139492182L, 5140125308L, 5140076690L, 5139540968L,
+      5139150288L, 5138954612L))
   }
 
   test("page size caps the result (O2)") {
-    assert(ReviewIngest.pageQuery(reviews, pageSize = 2).count() === 2L ||
-      ReviewIngest.pageQuery(reviews).count() <= 25L)
+    assert(ReviewIngest.pageQuery(reviews, pageSize = 2).count() === 2L)
+    assert(ReviewIngest.pageQuery(reviews).count() === 7L, "the default page holds every match")
   }
 }

@@ -32,7 +32,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (≈5 min across their suites) and tagging the 100-plan stream fuzz.
   *
   * Round 16 spent and repaid: CrashKillSpec (4 forked-JVM SIGKILL cells)
-  * + StageCacheSpec + the ivf_pq kind in VectorFuzzSpec added ~3 min;
+  * + the bench disk-cache spec (since deleted) + the ivf_pq kind in
+  * VectorFuzzSpec added ~3 min;
   * repaid by trimming the in-suite StreamFuzzSpec drains 100 → 64 (the
   * bulk evidence lives in the committed 390-plan artifacts) and by
   * preforking all four SIGKILL children CONCURRENTLY (suite cost 140 s →
