@@ -44,12 +44,17 @@ object JobProf {
       val fn = SparkEntry.queries(name)
       fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warm memos
       rows = Nil
+      starts.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val total = (System.nanoTime() - t0) / 1e9
+      // the bus delivers events asynchronously: wait, up to 10 s, until the
+      // end of every started job has been recorded
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (rows.size < starts.size && System.nanoTime() < deadline)
+        Thread.sleep(5)
       spark.sparkContext.removeSparkListener(listener)
-      Thread.sleep(200) // let the listener bus drain
       println(f"[jobprof] $name total=$total%.3f jobs=${rows.size}")
       rows.sortBy(_._1).foreach { case (id, sec, desc) =>
         println(f"[jobprof]   job=$id%-4d $sec%7.3f s  $desc")

@@ -443,15 +443,7 @@ object Corpus {
     * pathology the graph/containment artifacts hoist. At cluster scale
     * this is the staged feature table the scoring job reads. */
   @transient private lazy val dsirCache =
-    new SessionCache[String, DataFrame](_.unpersist())
-
-  /** Whole-module corpus-replacement hook (round-12 ADVICE): drop the
-    * dir-keyed DSIR feature table and source-shingle sets for `d`.
-    * Chained from [[graft.streaming.EventsStream.invalidateCorpus]]. */
-  def invalidateCorpus(d: String): Unit = {
-    dsirCache.invalidateIfAll(_ == d)
-    sourceShingleCache.invalidateIfAll(_._1 == d)
-  }
+    new SessionCache[DataFrame]()
 
   def dsirFeatureArtifact(s: SparkSession, d: String): DataFrame =
     dsirCache.getOrCompute(s, d) {
@@ -799,7 +791,7 @@ object Corpus {
   }
 
   private val sourceShingleCache =
-    new SessionCache[(String, Int), DataFrame](_.unpersist())
+    new SessionCache[DataFrame]()
 
   /** Distinct (source, shingle-hash) set — the corpus artifact under
     * [[sourceOverlap]]. Memoized per (session, dir, n) like the other
@@ -942,7 +934,7 @@ object Corpus {
   }
 
   def sourceShingleArtifact(s: SparkSession, d: String, n: Int): DataFrame =
-    sourceShingleCache.getOrCompute(s, (d, n)) {
+    sourceShingleCache.getOrCompute(s, d, n) {
       val docs = Tables.documents(s, d)
       docs.select(col("source"), split(lower(col("text")), "\\s+").as("tokens"))
         // shorter than n tokens → no n-shingles (sequence(0, negative) is

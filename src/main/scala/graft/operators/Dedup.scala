@@ -121,7 +121,7 @@ object Dedup {
     * never served frames bound to a dead context. (Round-3 verdict: the
     * unmemoized build re-ran inside every timed query — 44.7 s driver-side.) */
   @transient private lazy val shingleCache =
-    new SessionCache[String, (DataFrame, DataFrame)]({ case (sh, sig) => sh.unpersist(); sig.unpersist() })
+    new SessionCache[(DataFrame, DataFrame)]()
 
   def shingleArtifacts(s: SparkSession, d: String): (DataFrame, DataFrame) =
     shingleCache.getOrCompute(s, d) {
@@ -134,10 +134,10 @@ object Dedup {
     * [[shingleArtifacts]] because the minhash signatures that ride the
     * 3-gram frame have no analog here. */
   @transient private lazy val passageCache =
-    new SessionCache[(String, Int), DataFrame](_.unpersist())
+    new SessionCache[DataFrame]()
 
   def passageShingleArtifact(s: SparkSession, d: String, n: Int): DataFrame =
-    passageCache.getOrCompute(s, (d, n)) {
+    passageCache.getOrCompute(s, d, n) {
       shingles(Tables.documents(s, d), n).persist()
     }
 
@@ -301,11 +301,11 @@ object Dedup {
     * query pays only the candidate self-join and the per-pair aggregation,
     * the same split as the minhash and IVF artifacts. */
   @transient private lazy val containmentCache =
-    new SessionCache[(String, Long), (DataFrame, DataFrame)]({ case (pruned, sizes) => pruned.unpersist(); sizes.unpersist() })
+    new SessionCache[(DataFrame, DataFrame)]()
 
   def containmentArtifacts(s: SparkSession, d: String,
                            maxShingleDf: Long = 50): (DataFrame, DataFrame) =
-    containmentCache.getOrCompute(s, (d, maxShingleDf)) {
+    containmentCache.getOrCompute(s, d, maxShingleDf) {
       val (sh, _) = shingleArtifacts(s, d)
       val dfs = sh.groupBy(col("shingle")).agg(count(lit(1)).as("sdf"))
         .filter(col("sdf") >= 2 && col("sdf") <= maxShingleDf)
@@ -357,7 +357,7 @@ object Dedup {
     * both consumers re-reference the frame from inside iterative/recursive
     * plans, where uncut lineage would re-derive the join per step. */
   @transient private lazy val ccPairCache =
-    new SessionCache[String, DataFrame](_.unpersist())
+    new SessionCache[DataFrame]()
 
   def ccPairArtifact(s: SparkSession, d: String): DataFrame =
     ccPairCache.getOrCompute(s, d) {
@@ -372,7 +372,7 @@ object Dedup {
     * edges, so the evidence is non-vacuous at every SF and the all-pairs
     * gram join stays bounded-oracle-sized. */
   @transient private lazy val triPairCache =
-    new SessionCache[String, DataFrame](_.unpersist())
+    new SessionCache[DataFrame]()
 
   def triPairArtifact(s: SparkSession, d: String): DataFrame =
     triPairCache.getOrCompute(s, d) {
@@ -482,39 +482,16 @@ object Dedup {
     * banded-DP cross join is the whole cost of each (~2.8 s per query at
     * sf0.1 driver-side, paid twice before this artifact existed). The
     * truth set is slice-bounded (≤ a few hundred rows), so the cached
-    * frame is model-sized. Invalidate via [[invalidateEdTruth]] on corpus
-    * replacement. */
+    * frame is model-sized. */
   @transient private lazy val edTruthCache =
-    new SessionCache[(String, Long), DataFrame](_.unpersist())
+    new SessionCache[DataFrame]()
 
   def edTruthArtifact(s: SparkSession, d: String, maxDocId: Long = 300): DataFrame =
-    edTruthCache.getOrCompute(s, (d, maxDocId)) {
+    edTruthCache.getOrCompute(s, d, maxDocId) {
       val t = editDistancePairs(s, d, maxDocId = maxDocId).cache()
       t.count() // materialize: the artifact contract, not lazy lineage
       t
     }
-
-  /** Corpus-replacement invalidation hook for the slice-truth artifact. */
-  def invalidateEdTruth(d: String): Unit =
-    edTruthCache.removeIfAll(_._1 == d).foreach(df => scala.util.Try(df.unpersist()))
-
-  /** Whole-module corpus-replacement hook (round-12 ADVICE): drop EVERY
-    * dir-keyed memoized artifact this module derives from `d` — shingle
-    * signatures, passage shingles, containment prunes, the cc/tri exact
-    * pair sets, both cluster-label tables, and the ed slice truth. Chained
-    * from [[graft.streaming.EventsStream.invalidateCorpus]] so an in-place
-    * corpus rewrite can't leave any batch-layer memo serving stale data. */
-  def invalidateCorpus(d: String): Unit = {
-    shingleCache.invalidateIfAll(_ == d)
-    passageCache.invalidateIfAll(_._1 == d)
-    containmentCache.invalidateIfAll(_._1 == d)
-    ccPairCache.invalidateIfAll(_ == d)
-    triPairCache.invalidateIfAll(_ == d)
-    labelCache.invalidateIfAll(_ == d)
-    lshLabelCache.invalidateIfAll(_ == d)
-    invalidateEdTruth(d)
-    invalidateJaccardTruth(d)
-  }
 
   /** Edit-distance dedup at corpus scale: the banded minhash candidates
     * (memoized shingle/signature artifacts) prefilter to docs sharing a
@@ -604,21 +581,16 @@ object Dedup {
     * _ml / _simhash / q_minhash_recall) and the incremental cross-set bound
     * each re-ran the slice's shingle self-join per query — the dominant
     * cost of every one of them. The truth set is slice-bounded (≤ a few
-    * thousand pair rows at any SF), so the cached frame is model-sized.
-    * Invalidated in [[invalidateCorpus]]. */
+    * thousand pair rows at any SF), so the cached frame is model-sized. */
   @transient private lazy val jaccardTruthCache =
-    new SessionCache[(String, Long), DataFrame](_.unpersist())
+    new SessionCache[DataFrame]()
 
   def jaccardTruthArtifact(s: SparkSession, d: String, maxDocId: Long = 500): DataFrame =
-    jaccardTruthCache.getOrCompute(s, (d, maxDocId)) {
+    jaccardTruthCache.getOrCompute(s, d, maxDocId) {
       val t = exactShingleJaccardPairs(s, d, maxDocId).cache()
       t.count() // materialize: the artifact contract, not lazy lineage
       t
     }
-
-  /** Corpus-replacement invalidation hook for the Jaccard slice truth. */
-  def invalidateJaccardTruth(d: String): Unit =
-    jaccardTruthCache.removeIfAll(_._1 == d).foreach(df => scala.util.Try(df.unpersist()))
 
   private[graft] def exactShingleJaccardPairs(s: SparkSession, d: String,
                                               maxDocId: Long): DataFrame = {
@@ -829,7 +801,7 @@ object Dedup {
     * re-running the iterative loop. Keyed on the session identity too, so a
     * restarted SparkSession is never served frames bound to a dead context. */
   @transient private lazy val labelCache =
-    new SessionCache[String, DataFrame](_.unpersist())
+    new SessionCache[DataFrame]()
 
   def clusterLabels(s: SparkSession, d: String): DataFrame =
     labelCache.getOrCompute(s, d) {
@@ -848,7 +820,7 @@ object Dedup {
     * decisions only ever saw the oracle slice). Memoized under the same
     * persisted-cluster-table contract as [[clusterLabels]]. */
   @transient private lazy val lshLabelCache =
-    new SessionCache[String, DataFrame](_.unpersist())
+    new SessionCache[DataFrame]()
 
   def clusterLabelsLsh(s: SparkSession, d: String): DataFrame =
     lshLabelCache.getOrCompute(s, d) {
@@ -959,23 +931,6 @@ object Dedup {
       .filter(col("rn") === 1)
       .select(col("cluster"), col("doc_id").as("canonical_id"),
         col("len").as("kept_len"), col("cluster_size"))
-  }
-
-  /** Lifecycle hook for long-lived sessions: drop every memoized corpus
-    * artifact for (session, dir) — shingles, signatures, and both label
-    * tables — after a corpus is replaced. The next query rebuilds against
-    * the new data (the cluster-scale analog is dropping/rewriting the
-    * persisted artifact tables). */
-  def dropCorpusArtifacts(s: SparkSession, d: String): Unit = {
-    shingleCache.remove(s, d).foreach { case (sh, sig) =>
-      sh.unpersist(); sig.unpersist()
-    }
-    labelCache.remove(s, d).foreach(_.unpersist())
-    lshLabelCache.remove(s, d).foreach(_.unpersist())
-    passageCache.removeIf(s)(_._1 == d).foreach(_.unpersist())
-    containmentCache.removeIf(s)(_._1 == d).foreach { case (pruned, sizes) =>
-      pruned.unpersist(); sizes.unpersist()
-    }
   }
 
   /** SimHash: 64-bit signature from per-token hashes by bit-voting; near-dups

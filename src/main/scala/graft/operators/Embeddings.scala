@@ -75,16 +75,10 @@ object Embeddings {
     * corpus BUILD (one pass), the eigen step and bound query are the cheap
     * reads. */
   @transient private lazy val covCache =
-    new SessionCache[String, (Long, Array[Double], Array[Double])]()
+    new SessionCache[(Long, Array[Double], Array[Double])]()
 
   def covarianceModel(s: SparkSession, d: String): (Long, Array[Double], Array[Double]) =
     covCache.getOrCompute(s, d) { buildCovarianceModel(s, d) }
-
-  /** Corpus-replacement hook (round-12 ADVICE): drop the memoized
-    * covariance model for `d`. Chained from
-    * [[graft.streaming.EventsStream.invalidateCorpus]]. */
-  def invalidateCorpus(d: String): Unit =
-    covCache.invalidateIfAll(_ == d)
 
   private def buildCovarianceModel(s: SparkSession, d: String): (Long, Array[Double], Array[Double]) = {
     import s.implicits._

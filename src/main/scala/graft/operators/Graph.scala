@@ -26,17 +26,14 @@ object Graph {
     * |V|-proportional state (~15k ranks rows at sf0.1), so the right
     * partition count is state-sized, not input-sized (measured here and in
     * the gate scaladocs: 8 beats the session's 32 on every iterated gate).
-    * Env-overridable so a cluster-scale run sizes it to |V|/target-rows
-    * instead of the local constant; ranks are identical at any width
-    * (PartitionInvarianceSpec). */
-  val GatePartitions: Int =
-    sys.env.getOrElse("SPARK_GRAFT_GATE_PARTITIONS", "8").toInt
+    * A cluster-scale corpus would size it to |V| / target rows per
+    * partition; ranks are identical at any width (PartitionInvarianceSpec). */
+  val GatePartitions: Int = 8
 
   /** Scope `spark.sql.shuffle.partitions` to [[GatePartitions]] for a gate
     * body — every iterated gate ran this same set/try/finally inline; one
-    * helper keeps the width consistent with the persisted artifacts (an env
-    * override used to resize the artifacts but not the gates, splitting the
-    * co-partitioning the loops rely on). */
+    * helper keeps the width consistent with the persisted artifacts, whose
+    * co-partitioning the loops rely on. */
   private[graft] def withGatePartitions[T](s: SparkSession)(body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", GatePartitions.toString)
@@ -54,7 +51,7 @@ object Graph {
     * measured at sf0.1; 1.3 s with the build hoisted). At cluster scale
     * these are bucketed tables written by the ingest pass. */
   @transient private lazy val edgeCache =
-    new SessionCache[String, (DataFrame, DataFrame, DataFrame)]({ case (norm, nodes, pairs) => norm.unpersist(); nodes.unpersist(); pairs.unpersist() })
+    new SessionCache[(DataFrame, DataFrame, DataFrame)]()
 
   /** (normalized edges, nodes, distinct weighted pairs) — the third frame
     * is the pre-namespace (custkey, suppkey, w) aggregate, reused by
@@ -73,7 +70,8 @@ object Graph {
       // outputPartitioning, and AQE is scoped off for this one
       // materialization because under AQE the layout is still Unknown at
       // checkpoint-capture time. Width = [[GatePartitions]]; rows are the
-      // same either way, and the checkpoint blocks live for the session.
+      // same either way. The checkpoint blocks live until the memo is
+      // released, which unpersists the checkpoint's RDD ([[SessionCache]]).
       val pinnedNorm = {
         val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
         s.conf.set("spark.sql.adaptive.enabled", "false")
@@ -547,20 +545,12 @@ object Graph {
     * other label consumer read the artifact; rebuilding the contraction
     * inside each consumer would re-pay the per-round driver probes. */
   @transient private lazy val triLabelCache =
-    new SessionCache[String, DataFrame](_.unpersist())
+    new SessionCache[DataFrame]()
 
   def triClusterLabels(s: SparkSession, d: String): DataFrame =
     triLabelCache.getOrCompute(s, d) {
       connectedComponentsStar(Dedup.triPairArtifact(s, d)).localCheckpoint(true)
     }
-
-  /** Whole-module corpus-replacement hook (round-12 ADVICE): drop the
-    * dir-keyed edge-list build and the doc<200 component labels for `d`.
-    * Chained from [[graft.streaming.EventsStream.invalidateCorpus]]. */
-  def invalidateCorpus(d: String): Unit = {
-    edgeCache.invalidateIfAll(_ == d)
-    triLabelCache.invalidateIfAll(_ == d)
-  }
 
   /** `q_cc_star` gate: star contraction over the SAME memoized exact
     * bounded pair set as `q_cc_recursive` ([[Dedup.ccPairArtifact]]) — two

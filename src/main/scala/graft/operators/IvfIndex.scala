@@ -133,7 +133,7 @@ object IvfIndex {
     * quantized vectors alongside the cell assignments; deriving them inside
     * every probe re-paid the per-row transform per query (round 19). */
   @transient private lazy val q8Cache =
-    new SessionCache[String, DataFrame](_.unpersist())
+    new SessionCache[DataFrame]()
 
   def q8Index(s: SparkSession, d: String): DataFrame =
     q8Cache.getOrCompute(s, d) {
@@ -256,7 +256,7 @@ object IvfIndex {
     * index — the persisted-index contract extended with the codebook and
     * code tables (what a real IVF+PQ deployment stores). */
   @transient private lazy val pqCache =
-    new SessionCache[String, (DataFrame, DataFrame)]({ case (cb, codes) => cb.unpersist(); codes.unpersist() })
+    new SessionCache[(DataFrame, DataFrame)]()
 
   def pqIndex(s: SparkSession, d: String): (DataFrame, DataFrame) =
     pqCache.getOrCompute(s, d) {
@@ -367,10 +367,10 @@ object IvfIndex {
     * and the assignment/centroid frames are cached, so repeated queries
     * (and the bench) pay k-means exactly once per corpus: the contract of a
     * persisted index table on cluster storage. If the underlying embeddings
-    * change, call [[invalidateIndex]] (a persisted index needs an explicit
-    * rebuild too). */
+    * change, call [[SessionCache.invalidate]] (a persisted index needs an
+    * explicit rebuild too). */
   @transient private lazy val indexCache =
-    new SessionCache[String, (DataFrame, DataFrame)]({ case (assigned, centroids) => assigned.unpersist(); centroids.unpersist() })
+    new SessionCache[(DataFrame, DataFrame)]()
 
   def index(s: SparkSession, d: String): (DataFrame, DataFrame) =
     indexCache.getOrCompute(s, d) {
@@ -392,24 +392,6 @@ object IvfIndex {
     * by the parquet tables — no fit, no session cache dependency. */
   def load(s: SparkSession, indexDir: String): (DataFrame, DataFrame) =
     (s.read.parquet(s"$indexDir/assigned"), s.read.parquet(s"$indexDir/centroids"))
-
-  /** Drop the memoized index for a corpus dir (all sessions), unpersisting
-    * its cached frames. */
-  def invalidateIndex(d: String): Unit =
-    indexCache.removeIfAll(_ == d).foreach { case (assigned, centroids) =>
-      scala.util.Try { assigned.unpersist(); centroids.unpersist() }
-    }
-
-  /** Whole-module corpus-replacement hook (round-12 ADVICE): drop the
-    * coarse IVF index AND the PQ codebooks/code table for `d` — the PQ
-    * artifacts derive from the same embeddings, so invalidating one
-    * without the other would rerank against a stale geometry. Chained
-    * from [[graft.streaming.EventsStream.invalidateCorpus]]. */
-  def invalidateCorpus(d: String): Unit = {
-    invalidateIndex(d)
-    pqCache.invalidateIfAll(_ == d)
-    q8Cache.invalidateIfAll(_ == d)
-  }
 
   /** Registered query: IVF top-5 for the first 5 vectors (rows-only — the
     * k-means cells are model state, not SQL; recall pinned in IvfSpec).

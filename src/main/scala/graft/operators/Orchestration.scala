@@ -101,10 +101,17 @@ object Orchestration {
     enrichedNow
   }
 
-  /** Full run. Returns total enriched-record count; a re-run on the same
-    * input enriches nothing new. */
+  /** Full run. Returns total enriched-record count. Each review lands in
+    * bronze once: ids repeated within `rawPath` or already in bronze are
+    * dropped, so a re-run on the same or overlapping input adds nothing
+    * twice. */
   def run(spark: SparkSession, rawPath: String, layout: Layout, scorer: SentimentScorer): Long = {
-    ingestToBronze(spark, rawPath, layout)
+    val reviews = ReviewIngest.ingest(spark, rawPath).dropDuplicates("review_id")
+    val fresh =
+      if (!fileSystem(spark, layout).exists(new Path(layout.bronze))) reviews
+      else reviews.join(spark.read.parquet(layout.bronze).select(col("review_id").as("landed")),
+        col("review_id") === col("landed"), "left_anti")
+    ReviewIngest.writeBronze(fresh, layout.bronze)
     buildSilver(spark, layout)
     enrich(spark, layout, scorer)
   }

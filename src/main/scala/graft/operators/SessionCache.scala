@@ -2,35 +2,44 @@ package graft.operators
 
 import java.lang.ref.WeakReference
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import scala.jdk.CollectionConverters._
 
-/** Session-scoped memo cache for persisted corpus artifacts (shingle
-  * frames, IVF indexes, graph edge builds, …).
+/** Session-scoped memo cache for corpus artifacts (shingle frames, IVF
+  * indexes, graph edge builds, staged stream sources, …).
   *
-  * Entries are keyed by a per-session UUID — not by
-  * `System.identityHashCode`, which can be recycled after GC and would hand
-  * a new session a dead session's persisted plans. Lifecycle, honestly
-  * stated:
+  * An entry is keyed by (session, corpus dir, params). The session part is a
+  * per-session UUID — not `System.identityHashCode`, which can be recycled
+  * after GC and would hand a new session a dead session's persisted plans.
   *
-  *  - **Stopped contexts**: every access sweeps entries whose
-  *    SparkContext is stopped (or whose session was GC'd) — a restarted
-  *    application never accumulates dead entries.
-  *  - **Cycled sessions on a LIVE context** (`newSession()` per job in a
-  *    long-lived service): a DataFrame value strongly references its
-  *    session, so the weak reference cannot clear while the entry exists —
-  *    automatic sweeping is impossible by construction for DataFrame
-  *    values. The supported path is the explicit invalidation hook:
-  *    [[releaseSession]] drops the finished session's entries from EVERY
-  *    registered cache and hands them to a per-cache release callback
-  *    (unpersist). This is the "explicit invalidation hook when a session
-  *    stops" half of the round-6 ADVICE; the weak-ref sweep is the other.
+  * Lifecycle of an entry:
   *
-  * The values are usually `.persist()`-ed DataFrames: once the owning
-  * session/context is stopped its cached blocks are already released, so
-  * the stopped-context sweep only drops the map entry, never unpersists.
+  *  - **Built** on the first [[getOrCompute]] for its key, once; later
+  *    calls of the same session return the same value.
+  *  - **Swept** when its SparkContext is stopped or its session is GC'd:
+  *    every access drops those entries. The context's blocks are gone with
+  *    it, so the sweep drops the map entry and releases nothing.
+  *  - **Released with its session**: [[SessionCache.releaseSession]] drops
+  *    one session's entries from every cache and releases them. A DataFrame
+  *    value pins its session, so a cycled session on a live context
+  *    (`newSession()` per job in a long-lived service) is never swept; this
+  *    call is how such a service frees it.
+  *  - **Invalidated with its corpus**: [[SessionCache.invalidate]] drops
+  *    every entry built from one corpus dir, in all sessions, and releases
+  *    them. Call it when the tables under the dir are rewritten in place;
+  *    the next access rebuilds from the new files.
+  *
+  * Releasing a value frees what it holds. By default ([[free]]) a
+  * DataFrame, or each DataFrame of a tuple, is unpersisted, and so is the
+  * RDD of any `LogicalRDD` in its plan: `unpersist()` is a no-op on a
+  * `localCheckpoint`, whose blocks live on that RDD. A cache of on-disk
+  * values passes its own `release` instead (the staged-source caches delete
+  * their scratch dir). Both release paths drop every entry for a dir or a
+  * session at once, so no surviving memo can read freed checkpoint blocks
+  * through its lineage.
   */
-private[graft] final class SessionCache[K, V](
-    release: V => Unit = (_: V) => ()) {
+private[graft] final class SessionCache[V](release: V => Unit = SessionCache.free _) {
 
   /** Value cell. `computeIfAbsent` inserts this cheaply; the build runs on
     * first [[force]] OUTSIDE the map's bin lock. CHM's mapping functions
@@ -49,76 +58,30 @@ private[graft] final class SessionCache[K, V](
     def peek: Option[V] = if (computed) Some(force) else None
   }
 
-  private val map = new ConcurrentHashMap[(String, K), Cell]()
+  /** (session id, corpus dir, params) → cell. */
+  private val map = new ConcurrentHashMap[(String, String, Any), Cell]()
 
   SessionCache.register(this)
 
-  /** Drop every entry of this session and run the release callback on each
-    * value (part of the global [[SessionCache.releaseSession]] hook). */
-  private[graft] def releaseAll(s: SparkSession): Unit =
-    removeIf(s)(_ => true).foreach(v => scala.util.Try(release(v)))
-
-  // Stable per-session identifier: a UUID minted on first sight, held in a
-  // weak identity map (SparkSession doesn't override equals). Unlike
-  // `System.identityHashCode`, a UUID is never recycled, so a new session
-  // can never alias a dead session's cache entries; the weak keys mean the
-  // id table itself can't pin sessions. (`SparkSession.sessionUUID` would
-  // be the natural key but is private[sql].)
-  private[this] val sessionIds = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-
-  private def sessionKey(s: SparkSession): String =
-    sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
-
-  def getOrCompute(s: SparkSession, k: K)(f: => V): V = {
+  def getOrCompute(s: SparkSession, dir: String, params: Any = ())(f: => V): V = {
     sweep()
-    map.computeIfAbsent((sessionKey(s), k), _ => new Cell(s, () => f)).force
+    map.computeIfAbsent((SessionCache.sessionKey(s), dir, params),
+      _ => new Cell(s, () => f)).force
   }
 
-  /** Drop one entry; returns the evicted value (if ever built) so callers
-    * can unpersist. */
-  def remove(s: SparkSession, k: K): Option[V] =
-    Option(map.remove((sessionKey(s), k))).flatMap(_.peek)
-
-  /** Drop every entry of this session whose key matches; returns the
-    * evicted values (invalidation hook for corpus replacement). */
-  def removeIf(s: SparkSession)(pred: K => Boolean): Seq[V] = {
-    val sk = sessionKey(s)
-    val out = Seq.newBuilder[V]
+  /** Drop every entry whose (session id, dir) matches and release the
+    * values that were built. */
+  private def evict(matches: (String, String) => Boolean): Unit = {
+    val dropped = Seq.newBuilder[V]
     val it = map.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      if (e.getKey._1 == sk && pred(e.getKey._2)) {
-        out ++= e.getValue.peek
+      if (matches(e.getKey._1, e.getKey._2)) {
+        dropped ++= e.getValue.peek
         it.remove()
       }
     }
-    out.result()
-  }
-
-  /** Corpus-replacement form of [[removeIfAll]]: drop matching entries
-    * across ALL sessions and run this cache's OWN release callback on each
-    * evicted value (unpersist / scratch-dir delete — whatever the cache
-    * was constructed with). Every per-module `invalidateCorpus` hook rides
-    * this, so the release semantics live in one place per cache instead of
-    * being re-stated at each hook site. */
-  def invalidateIfAll(pred: K => Boolean): Unit =
-    removeIfAll(pred).foreach(v => scala.util.Try(release(v)))
-
-  /** Drop matching entries across ALL sessions (corpus-replacement hooks
-    * that invalidate by data dir, session-agnostic); returns evicted
-    * values. */
-  def removeIfAll(pred: K => Boolean): Seq[V] = {
-    val out = Seq.newBuilder[V]
-    val it = map.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (pred(e.getKey._2)) {
-        out ++= e.getValue.peek
-        it.remove()
-      }
-    }
-    out.result()
+    dropped.result().foreach(v => scala.util.Try(release(v)))
   }
 
   private def sweep(): Unit = {
@@ -131,26 +94,66 @@ private[graft] final class SessionCache[K, V](
 
   /** Visible for tests: live entry count after a sweep. */
   private[graft] def size: Int = { sweep(); map.size() }
+
+  /** Live entries of corpus dir `dir` after a sweep. */
+  private def size(dir: String): Int = {
+    sweep()
+    map.keySet().asScala.count(_._2 == dir)
+  }
 }
 
 object SessionCache {
   // Registry of every cache instance (they are all object-level lazy vals —
-  // a bounded, static population), so a long-lived service can release one
-  // finished session's artifacts across ALL operator caches with one call.
+  // a bounded, static population), so one call reaches every cache.
   private val registry =
     java.util.Collections.synchronizedList(
-      new java.util.ArrayList[SessionCache[_, _]]())
+      new java.util.ArrayList[SessionCache[_]]())
 
-  private def register(c: SessionCache[_, _]): Unit = registry.add(c)
+  private def register(c: SessionCache[_]): Unit = registry.add(c)
 
-  /** The explicit end-of-session invalidation hook: drop (and release —
-    * unpersist, by each cache's callback) every memoized artifact owned by
-    * `s` in every cache. Call this when a long-lived service is done with
-    * a session created via `newSession()` on a shared context; stopped
-    * contexts are swept automatically, cycled-but-live sessions cannot be
-    * (their DataFrames pin the session — see the class scaladoc). */
+  // Stable per-session identifier: a UUID minted on first sight, held in a
+  // weak identity map (SparkSession doesn't override equals). Unlike
+  // `System.identityHashCode`, a UUID is never recycled, so a new session
+  // can never alias a dead session's cache entries; the weak keys mean the
+  // id table itself can't pin sessions. (`SparkSession.sessionUUID` would
+  // be the natural key but is private[sql].)
+  private val sessionIds = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, String]())
+
+  private def sessionKey(s: SparkSession): String =
+    sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
+
+  /** Drop and release every artifact built from corpus dir `dir`, in every
+    * cache and every session. */
+  def invalidate(dir: String): Unit =
+    registry.forEach(_.evict((_, d) => d == dir))
+
+  /** Drop and release every artifact owned by `s`, in every cache. Call this
+    * when a long-lived service is done with a session created via
+    * `newSession()` on a shared context. */
   def releaseSession(s: SparkSession): Unit = {
-    val it = registry.iterator()
-    while (it.hasNext) it.next().releaseAll(s)
+    val sk = sessionKey(s)
+    registry.forEach(_.evict((k, _) => k == sk))
+  }
+
+  /** Visible for tests: live entries of corpus dir `dir` across every cache. */
+  private[graft] def size(dir: String): Int = {
+    var n = 0
+    registry.forEach(c => n += c.size(dir))
+    n
+  }
+
+  /** The default release: unpersist a DataFrame (each one of a tuple) and
+    * the RDD behind every `LogicalRDD` in its plan — a checkpoint's blocks
+    * live there, out of reach of `Dataset.unpersist`. */
+  private def free(v: Any): Unit = v match {
+    case ds: Dataset[_] =>
+      ds.unpersist()
+      ds.queryExecution.logical.foreach {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ =>
+      }
+    case p: Product => p.productIterator.foreach(free)
+    case _ =>
   }
 }

@@ -232,17 +232,11 @@ object Similarity {
     * in [[cosineNearDupsBucketed]] evaluated the 96-hyperplane projection
     * TWICE per query (both join sides re-derive from the scan). */
   @transient private lazy val rpSigCache =
-    new SessionCache[(String, Int, Int), (DataFrame, DataFrame)]({ case (sigs, normed) => sigs.unpersist(); normed.unpersist() })
-
-  /** Corpus-replacement hook (round-12 ADVICE): drop the memoized RP
-    * signature/normed frames for `d` at every (tables, bits) geometry.
-    * Chained from [[graft.streaming.EventsStream.invalidateCorpus]]. */
-  def invalidateCorpus(d: String): Unit =
-    rpSigCache.invalidateIfAll(_._1 == d)
+    new SessionCache[(DataFrame, DataFrame)]()
 
   def rpSigArtifacts(s: SparkSession, d: String,
                      tables: Int, bits: Int): (DataFrame, DataFrame) =
-    rpSigCache.getOrCompute(s, (d, tables, bits)) {
+    rpSigCache.getOrCompute(s, d, (tables, bits)) {
       val emb = Tables.embeddings(s, d)
       val sigs = emb.select(
         col("vec_id"),
@@ -250,13 +244,6 @@ object Similarity {
       val normed = emb
         .select(col("vec_id"), col("embedding"), vecNorm(col("embedding")).as("nrm"))
       (sigs.persist(), normed.persist())
-    }
-
-  /** Drop the memoized signature artifacts for a corpus dir (all sessions
-    * and parameterizations) after the corpus is replaced. */
-  def dropSigArtifacts(d: String): Unit =
-    rpSigCache.removeIfAll(_._1 == d).foreach { case (sigs, normed) =>
-      scala.util.Try { sigs.unpersist(); normed.unpersist() }
     }
 
   /** Default LSH parameterization for the cosine near-dup path. Chosen by a

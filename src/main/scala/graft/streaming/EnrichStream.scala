@@ -63,19 +63,11 @@ object EnrichStream {
     * dir)), not per-query work — memoized like the shingle/IVF artifacts so
     * bench reps and Verify time the STREAM, not a silver rebuild. The
     * release callback deletes the scratch directory — unlike the persisted-
-    * DataFrame caches, this value is on-disk state, so releaseSession /
-    * sweep must reclaim the files, not just the map entry. */
+    * DataFrame caches, this value is on-disk state, so `releaseSession` and
+    * `invalidate` must reclaim the files, not just the map entry. */
   @transient private lazy val silverStage =
-    new graft.operators.SessionCache[String, String](
+    new graft.operators.SessionCache[String](
       dir => deleteRecursively(new java.io.File(dir)))
-
-  /** Corpus-replacement invalidation (the [[graft.operators.IvfIndex
-    * .invalidateIndex]] pattern): a rewritten corpus at the same data dir
-    * must not be served a stale staged silver table. Deletes the scratch
-    * dirs across all sessions. */
-  def invalidateSilver(d: String): Unit =
-    silverStage.removeIfAll(_ == d)
-      .foreach(dir => deleteRecursively(new java.io.File(dir)))
 
   def enrichedBatch(spark: SparkSession, d: String): DataFrame =
     EventsStream.memoDrain(spark, d, "enrich") {

@@ -128,42 +128,8 @@ object EventsStream {
     * purchase's join window, so an AvailableNow drain of the outer join
     * holds nothing back (the no-data flush batch emits the tail). */
   @transient private lazy val eventsStage =
-    new graft.operators.SessionCache[String, String](
+    new graft.operators.SessionCache[String](
       dir => deleteRecursively(new java.io.File(dir)))
-
-  /** Corpus-replacement invalidation hook for the staged event files.
-    * The drained gate payloads DERIVE from the staged files, so dropping
-    * the stage must drop them too — otherwise every gate keeps serving the
-    * replaced corpus's memoized sink (round-10 ask #6: these hooks existed
-    * but nothing chained them). */
-  def invalidateEventsStage(d: String): Unit = {
-    eventsStage.removeIfAll(_ == d)
-      .foreach(dir => deleteRecursively(new java.io.File(dir)))
-    invalidateDrains(d)
-  }
-
-  /** Whole-corpus replacement hook: drop EVERY dir-keyed memoized artifact
-    * derived from `d` — the streaming layer (staged events, replay stage,
-    * drained payloads, staged silver) AND every batch-layer module cache
-    * (shingle/containment/pair/label artifacts, graph edge builds, the
-    * IVF/PQ index, RP signatures, DSIR features, the covariance model, the
-    * ed slice truth). Call this when the parquet tables under `d` are
-    * rewritten in place (a compaction, a backfill, a test fixture swap);
-    * the next access to any of them recomputes from the new files.
-    * (Round-12 ADVICE: before round 13 only the streaming caches and the
-    * ed truth were chained — a dozen batch-layer caches kept serving the
-    * replaced corpus, the exact hazard this hook documents.) */
-  def invalidateCorpus(d: String): Unit = {
-    invalidateEventsStage(d)
-    invalidateEventsReplayStage(d)
-    EnrichStream.invalidateSilver(d)
-    graft.operators.Dedup.invalidateCorpus(d)
-    graft.operators.Graph.invalidateCorpus(d)
-    graft.operators.IvfIndex.invalidateCorpus(d)
-    graft.operators.Embeddings.invalidateCorpus(d)
-    graft.operators.Similarity.invalidateCorpus(d)
-    graft.operators.Corpus.invalidateCorpus(d)
-  }
 
   private[graft] def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
@@ -275,17 +241,11 @@ object EventsStream {
     * every drain end-to-end (first touch computes), and the payload IS the
     * drained sink. */
   @transient private lazy val drainedPayloads =
-    new graft.operators.SessionCache[(String, String), DataFrame](
-      df => { scala.util.Try(df.unpersist()); () })
-
-  /** Corpus-replacement invalidation hook for the drained payloads. */
-  def invalidateDrains(d: String): Unit =
-    drainedPayloads.removeIfAll(_._1 == d)
-      .foreach(df => scala.util.Try(df.unpersist()))
+    new graft.operators.SessionCache[DataFrame]()
 
   private[graft] def memoDrain(spark: SparkSession, d: String, gate: String)
                               (body: => DataFrame): DataFrame =
-    drainedPayloads.getOrCompute(spark, (d, gate))(body)
+    drainedPayloads.getOrCompute(spark, d, gate)(body)
 
   /** The STATE-SIZE side of the watermark contract (round-10 ask #4): the
     * recovery gates prove state RESTORES; nothing pinned that it stays
@@ -778,13 +738,8 @@ object EventsStream {
     * reproduced at the transport layer. No sentinel: dedup emits on first
     * arrival, nothing is held. */
   @transient private lazy val eventsReplayStage =
-    new graft.operators.SessionCache[String, String](
+    new graft.operators.SessionCache[String](
       dir => deleteRecursively(new java.io.File(dir)))
-
-  /** Corpus-replacement invalidation hook for the replay-staged files. */
-  def invalidateEventsReplayStage(d: String): Unit =
-    eventsReplayStage.removeIfAll(_ == d)
-      .foreach(dir => deleteRecursively(new java.io.File(dir)))
 
   private[graft] def stageEventsReplay(spark: SparkSession, d: String): String =
     eventsReplayStage.getOrCompute(spark, d) {

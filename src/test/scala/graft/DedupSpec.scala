@@ -122,14 +122,17 @@ class DedupSpec extends SparkSpec with org.scalactic.Tolerance {
   }
 
   test("shingle/signature artifacts are memoized per (session, corpus)") {
-    val (sh1, sig1) = Dedup.shingleArtifacts(spark, sf)
-    val (sh2, sig2) = Dedup.shingleArtifacts(spark, sf)
+    val d = privateCorpus("documents")
+    val (sh1, sig1) = Dedup.shingleArtifacts(spark, d)
+    val (sh2, sig2) = Dedup.shingleArtifacts(spark, d)
     assert((sh1 eq sh2) && (sig1 eq sig2),
       "second call must return the same persisted frames, not a rebuild")
-    // lifecycle: dropping the artifacts forces a rebuild on next access
-    Dedup.dropCorpusArtifacts(spark, sf)
-    val (sh3, _) = Dedup.shingleArtifacts(spark, sf)
-    assert(!(sh3 eq sh1), "drop must evict the memoized frames")
+    // lifecycle: invalidating the corpus forces a rebuild on next access
+    operators.SessionCache.invalidate(d)
+    val (sh3, _) = Dedup.shingleArtifacts(spark, d)
+    assert(!(sh3 eq sh1), "invalidate must evict the memoized frames")
+    operators.SessionCache.invalidate(d)
+    streaming.EventsStream.deleteRecursively(new java.io.File(d))
   }
 
   test("minhash banding recall: every exact pair at j >= 0.5 survives the banded path") {

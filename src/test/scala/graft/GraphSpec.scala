@@ -87,18 +87,22 @@ class GraphSpec extends SparkSpec {
   }
 
   test("session cache: hit on same session, miss across sessions, explicit removal") {
-    val cache = new SessionCache[String, Object]()
+    val cache = new SessionCache[Object]()
     val s1 = spark
     val s2 = spark.newSession()
-    val a = cache.getOrCompute(s1, "k")(new Object)
-    assert(cache.getOrCompute(s1, "k")(new Object) eq a, "same session must hit")
-    val b = cache.getOrCompute(s2, "k")(new Object)
+    val (d, other) = ("graft-cache-test-a", "graft-cache-test-b")
+    val a = cache.getOrCompute(s1, d)(new Object)
+    assert(cache.getOrCompute(s1, d)(new Object) eq a, "same session must hit")
+    assert(!(cache.getOrCompute(s1, d, 1)(new Object) eq a), "other params are another entry")
+    val b = cache.getOrCompute(s2, d)(new Object)
     assert(!(b eq a), "a different session must never see another session's entry")
-    assert(cache.size === 2)
-    assert(cache.remove(s1, "k").contains(a))
-    assert(cache.remove(s1, "k").isEmpty)
-    assert(cache.size === 1)
-    cache.removeIfAll(_ => true)
+    val c = cache.getOrCompute(s1, other)(new Object)
+    assert(cache.size === 4)
+    SessionCache.invalidate(d)
+    assert(cache.size === 1, "invalidate drops the dir's entries in every session")
+    assert(cache.getOrCompute(s1, other)(new Object) eq c, "another dir's entry survives")
+    assert(!(cache.getOrCompute(s1, d)(new Object) eq a), "an invalidated entry rebuilds")
+    Seq(d, other).foreach(SessionCache.invalidate)
     assert(cache.size === 0)
   }
 
@@ -304,17 +308,20 @@ class GraphSpec extends SparkSpec {
 
   test("releaseSession evicts one session's entries everywhere and runs the release callback") {
     val released = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cache = new SessionCache[String, String](v => released += v)
+    val cache = new SessionCache[String](v => released += v)
     val s2 = spark.newSession()
-    cache.getOrCompute(spark, "k")("mine")
-    cache.getOrCompute(s2, "k")("theirs")
+    val d = privateCorpus("documents")
+    cache.getOrCompute(spark, d)("mine")
+    cache.getOrCompute(s2, d)("theirs")
     // a real operator cache participates in the same global hook
-    val artifactBefore = graft.operators.Dedup.shingleArtifacts(s2, sf)._1
+    val artifactBefore = graft.operators.Dedup.shingleArtifacts(s2, d)._1
     SessionCache.releaseSession(s2)
     assert(released.toSeq === Seq("theirs"), "only the released session's value runs the callback")
     assert(cache.size === 1, "the other session's entry survives")
-    val artifactAfter = graft.operators.Dedup.shingleArtifacts(s2, sf)._1
+    val artifactAfter = graft.operators.Dedup.shingleArtifacts(s2, d)._1
     assert(!(artifactAfter eq artifactBefore), "released artifact must rebuild on next access")
+    SessionCache.invalidate(d)
+    streaming.EventsStream.deleteRecursively(new java.io.File(d))
   }
 
   test("personalized pagerank normalizes by seeds ∩ nodes: an absent seed is ignored") {

@@ -1,21 +1,22 @@
 package graft
 
+import graft.operators.{Dedup, SessionCache}
 import graft.streaming.EventsStream
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** Corpus-replacement invalidation (round-10 ask #6): the memoized drain
-  * payloads and the edit-distance slice truth are keyed by corpus DIR, so
-  * rewriting the parquet tables in place (compaction, backfill, fixture
-  * swap) silently keeps serving the old corpus until the invalidation hooks
-  * run. Before round 12 the hooks existed but nothing chained them; this
-  * spec pins the whole path: the memo IS stale after an in-place swap, and
-  * [[EventsStream.invalidateCorpus]] makes the next access recompute from
-  * the new files — for the staged events, the drained gate payloads, and
-  * the document-derived truth cache alike. */
+/** Corpus-replacement invalidation: every memoized artifact is keyed by its
+  * corpus DIR, so rewriting the parquet tables in place (compaction,
+  * backfill, fixture swap) silently keeps serving the old corpus until
+  * [[SessionCache.invalidate]] runs. This spec pins the whole path: the
+  * memo IS stale after an in-place swap, and `invalidate` makes the next
+  * access recompute from the new files — for the staged events, the drained
+  * gate payloads, and the document-derived caches alike — and frees what
+  * the dropped memos held, checkpoint blocks included. */
 class InvalidationSpec extends SparkSpec {
 
-  test("invalidateCorpus recomputes drains and ed truth after an in-place swap") {
+  test("invalidate recomputes drains and ed truth after an in-place swap") {
     val d = Files.createTempDirectory("graft-corpus-swap").toString
     val ev = Tables.events(spark, sf)
     ev.write.mode("overwrite").parquet(s"$d/events.parquet")
@@ -25,11 +26,11 @@ class InvalidationSpec extends SparkSpec {
 
     val sum1 = EventsStream.windowedAggGate(spark, d)
       .agg(sum(col("n_events"))).head().getLong(0)
-    val truth1 = operators.Dedup.edTruthArtifact(spark, d).count()
+    val truth1 = Dedup.edTruthArtifact(spark, d).count()
     // a BATCH-layer dir-keyed cache (round-12 ADVICE: before round 13 these
     // were NOT chained — the shingle artifact kept serving the replaced
     // corpus while the streaming memos recomputed)
-    val sig1 = operators.Dedup.shingleArtifacts(spark, d)._2.count()
+    val sig1 = Dedup.shingleArtifacts(spark, d)._2.count()
 
     // In-place swap BY AN EXTERNAL WRITER (filesystem move, not this
     // session's DataFrameWriter — an in-session overwrite fires
@@ -60,13 +61,13 @@ class InvalidationSpec extends SparkSpec {
     // the hazard this hook exists for.
     val staleSum = EventsStream.windowedAggGate(spark, d)
       .agg(sum(col("n_events"))).head().getLong(0)
-    val staleTruth = operators.Dedup.edTruthArtifact(spark, d).count()
-    val staleSig = operators.Dedup.shingleArtifacts(spark, d)._2.count()
+    val staleTruth = Dedup.edTruthArtifact(spark, d).count()
+    val staleSig = Dedup.shingleArtifacts(spark, d)._2.count()
     assert(staleSum === sum1, "drain memo unexpectedly recomputed without invalidation")
     assert(staleTruth === truth1, "ed truth memo unexpectedly recomputed without invalidation")
     assert(staleSig === sig1, "shingle memo unexpectedly recomputed without invalidation")
 
-    EventsStream.invalidateCorpus(d)
+    SessionCache.invalidate(d)
 
     val freshSum = EventsStream.windowedAggGate(spark, d)
       .agg(sum(col("n_events"))).head().getLong(0)
@@ -74,19 +75,52 @@ class InvalidationSpec extends SparkSpec {
       s"post-invalidation drain must see the halved corpus ($freshSum vs $sum1)")
     // every (i, i+100) planted pair is exact → lev 0; >= admits incidental
     // same-text pairs without depending on them
-    val planted = operators.Dedup.edTruthArtifact(spark, d)
+    val planted = Dedup.edTruthArtifact(spark, d)
       .filter(col("lev") === 0 && col("doc_b") === col("doc_a") + 100).count()
     assert(planted >= baseCount,
       s"post-invalidation truth must contain the $baseCount planted exact pairs (got $planted)")
     // the batch-layer cache must also see the swapped corpus: the doc set
     // went from the full table to 2×(doc<100), so the per-doc signature
     // row count (MinhashPerms rows per doc) must change with it
-    val freshSig = operators.Dedup.shingleArtifacts(spark, d)._2.count()
+    val freshSig = Dedup.shingleArtifacts(spark, d)._2.count()
     assert(freshSig !== sig1,
       s"post-invalidation shingle artifact must reflect the swapped corpus ($freshSig vs $sig1)")
 
-    EventsStream.invalidateCorpus(d) // drop the swap corpus's artifacts
+    SessionCache.invalidate(d) // drop the swap corpus's artifacts
     EventsStream.deleteRecursively(new java.io.File(d))
+  }
+
+  test("invalidate frees a checkpointed artifact and drops only its own dir") {
+    val d = privateCorpus("documents")
+    val other = privateCorpus("documents")
+    val sc = spark.sparkContext
+    def checkpointRdds(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
+
+    val cc = Dedup.ccPairArtifact(spark, d)
+    val ccIds = checkpointRdds(cc)
+    assert(ccIds.nonEmpty, "ccPairArtifact must be a locally checkpointed frame")
+    assert(ccIds.forall(sc.getPersistentRDDs.contains), "checkpoint blocks must be held")
+    Dedup.shingleArtifacts(spark.newSession(), d) // another session, same dir
+    val otherCc = Dedup.ccPairArtifact(spark, other)
+    val otherRows = otherCc.count()
+    val otherEntries = SessionCache.size(other)
+    assert(SessionCache.size(d) >= 2 && otherEntries >= 1)
+
+    SessionCache.invalidate(d)
+
+    assert(!ccIds.exists(sc.getPersistentRDDs.contains),
+      s"invalidate must unpersist the checkpoint RDDs $ccIds")
+    assert(SessionCache.size(d) === 0, "an entry of the invalidated dir survived")
+    assert(SessionCache.size(other) === otherEntries, "another dir's entries were dropped")
+    assert(Dedup.ccPairArtifact(spark, other) eq otherCc)
+    assert(otherCc.count() === otherRows, "another dir's checkpoint must stay readable")
+    assert(!(Dedup.ccPairArtifact(spark, d) eq cc), "the invalidated artifact must rebuild")
+
+    Seq(d, other).foreach { dir =>
+      SessionCache.invalidate(dir)
+      EventsStream.deleteRecursively(new java.io.File(dir))
+    }
   }
 
   test("state-bound machinery is live: an impossible bound reds the drain") {

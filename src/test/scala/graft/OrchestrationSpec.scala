@@ -158,13 +158,30 @@ class OrchestrationSpec extends SparkSpec {
   }
 
   test("Orchestration.run twice on the same pages scores each review once") {
-    val layout = Layout(Files.createTempDirectory("graft-twice").toString)
-    val pages = ReviewPages.write(15).toString
+    val root = Files.createTempDirectory("graft-twice")
+    val layout = Layout(root.resolve("lake").toString)
+    val pages = ReviewPages.write(root.resolve("pages-a"), 15).toString
     assert(Orchestration.run(spark, pages, layout, LexiconScorer) === 15L)
     assert(Orchestration.run(spark, pages, layout, LexiconScorer) === 0L)
-    val ids = spark.read.parquet(layout.results).select("record_id").collect().map(_.getString(0))
-    assert(ids.length === 15 && ids.distinct.length === 15)
-    val silver = spark.read.parquet(layout.silver)
-    assert(silver.count() === 15L && silver.filter(col("processed") === 0).count() === 0L)
+    // overlapping pages: ids 11-15 already landed, 16-20 are new, and 20
+    // repeats within the call
+    val overlap = ReviewPages.writePage(root.resolve("pages-b"), (11L to 20L) :+ 20L).toString
+    assert(Orchestration.run(spark, overlap, layout, LexiconScorer) === 5L)
+
+    val want = (1L to 20L).toSeq
+    def ids(dir: String, c: String): Seq[Long] =
+      spark.read.parquet(dir).select(col(c).cast("long")).collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids(layout.bronze, "review_id") === want, "each id once in bronze")
+    assert(ids(layout.silver, "id") === want, "each id once in silver")
+    assert(ids(layout.results, "record_id") === want, "each id once in results")
+    assert(spark.read.parquet(layout.silver).filter(col("processed") === 0).count() === 0L)
+
+    // the dashboard page reads bronze: it must equal one run over ids 1-20
+    val single = Layout(root.resolve("single").toString)
+    Orchestration.run(spark, ReviewPages.write(root.resolve("pages-all"), 20).toString,
+      single, LexiconScorer)
+    def page(l: Layout) = ReviewIngest.pageQuery(spark.read.parquet(l.bronze)).collect().toSeq
+    assert(page(layout).nonEmpty)
+    assert(page(layout) === page(single))
   }
 }

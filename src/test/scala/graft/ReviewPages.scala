@@ -36,6 +36,17 @@ object ReviewPages {
     dir
   }
 
+  /** Writes one page holding `ids` in order (repeats kept) into `dir`
+    * (created if absent), each review as [[write]] renders it from
+    * `firstId = 1`, and returns `dir`. */
+  def writePage(dir: Path, ids: Seq[Long]): Path = {
+    Files.createDirectories(dir)
+    val result = ids.map(id => review(id, (id - 1).toInt)).mkString(",")
+    Files.writeString(dir.resolve(s"page-${ids.head}.json"),
+      s"""{"count":${ids.size},"result":[$result],"sort_options":["relevance"]}""")
+    dir
+  }
+
   /** [[write]] into a new temp dir. */
   def write(n: Int): Path = write(Files.createTempDirectory("graft-pages"), n)
 }

@@ -226,7 +226,7 @@ class Round4OpsSpec extends SparkSpec with org.scalactic.Tolerance {
       (8L, ("a " * 50) + "long tail", "en", "src1", 109L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    graft.operators.Dedup.dropCorpusArtifacts(spark, dir)
+    graft.operators.SessionCache.invalidate(dir)
     // each op must EXECUTE without an exception; row counts are free to be 0
     assert(TextAnalysis.tokenEntropy(spark, dir).collect() != null)
     assert(TextAnalysis.bm25Rank(spark, dir).collect() != null)
@@ -239,6 +239,6 @@ class Round4OpsSpec extends SparkSpec with org.scalactic.Tolerance {
     assert(Corpus.ksLengthTest(spark, dir).collect() != null)
     assert(Corpus.langSourceMi(spark, dir).collect() != null)
     assert(Corpus.langSourceChi2(spark, dir).collect() != null)
-    graft.operators.Dedup.dropCorpusArtifacts(spark, dir)
+    graft.operators.SessionCache.invalidate(dir)
   }
 }

@@ -225,15 +225,21 @@ class SimilaritySpec extends SparkSpec with org.scalactic.Tolerance {
   }
 
   test("RP-signature artifacts are memoized per (session, corpus, params) with a drop hook") {
-    val (s1, n1) = Similarity.rpSigArtifacts(spark, sf,
+    val d = privateCorpus("embeddings")
+    val (s1, n1) = Similarity.rpSigArtifacts(spark, d,
       Similarity.CosineLshTables, Similarity.CosineLshBits)
-    val (s2, n2) = Similarity.rpSigArtifacts(spark, sf,
+    val (s2, n2) = Similarity.rpSigArtifacts(spark, d,
       Similarity.CosineLshTables, Similarity.CosineLshBits)
     assert((s1 eq s2) && (n1 eq n2),
       "second call must return the same persisted frames, not a rebuild")
-    Similarity.dropSigArtifacts(sf)
-    val (s3, _) = Similarity.rpSigArtifacts(spark, sf,
+    val (other, _) = Similarity.rpSigArtifacts(spark, d, 2, Similarity.CosineLshBits)
+    assert(!(other eq s1), "another geometry is another entry")
+    operators.SessionCache.invalidate(d)
+    assert(operators.SessionCache.size(d) === 0, "invalidate drops every geometry of the dir")
+    val (s3, _) = Similarity.rpSigArtifacts(spark, d,
       Similarity.CosineLshTables, Similarity.CosineLshBits)
-    assert(!(s3 eq s1), "drop must evict the memoized frames")
+    assert(!(s3 eq s1), "invalidate must evict the memoized frames")
+    operators.SessionCache.invalidate(d)
+    streaming.EventsStream.deleteRecursively(new java.io.File(d))
   }
 }

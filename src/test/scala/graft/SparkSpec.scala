@@ -25,4 +25,15 @@ abstract class SparkSpec extends AnyFunSuite {
     s
   }
   def sf: String = SparkSpec.sf
+
+  /** A fresh corpus dir holding copies of `tables` from [[sf]]: a test that
+    * invalidates or releases its artifacts then leaves the memos of [[sf]],
+    * which the other suites of the JVM share, untouched. */
+  def privateCorpus(tables: String*): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-private-corpus")
+    tables.foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(sf, s"$t.parquet"), dir.resolve(s"$t.parquet"))
+    }
+    dir.toString
+  }
 }
