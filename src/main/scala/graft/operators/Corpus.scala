@@ -626,13 +626,6 @@ object Corpus {
       }
   }
 
-  /** Registered (rows-only companion kept for inspection): per-bin
-    * occupancy of the 512-token packing. */
-  def packQuery(s: SparkSession, d: String): DataFrame =
-    packSequences(Tables.documents(s, d), budget = 512).toDF()
-      .groupBy(col("bin_id"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("bin_tokens"))
-
   /** [[packSequences]] promoted to a bound oracle (round-7 VERDICT ask #4):
     * bin ids encode Spark's hash partitioning, so the layout itself is not
     * SQL-expressible — the gate payload is the layout's conservation laws

@@ -153,13 +153,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** D2 summary for the correctness dump (small, stable row set). */
-  def nearDupSummary(s: SparkSession, d: String): DataFrame =
-    nearDupPairs(s, d, 0.2)
-      .agg(
-        count(lit(1)).as("n_pairs"),
-        coalesce(round(avg(col("jaccard")), 4), lit(0.0)).as("avg_jaccard"))
-
   /** MinHash estimator accuracy, bound-oracled (the pattern that turned the
     * approx-percentile/distinct queries oracle-checkable): over a bounded
     * doc slice, every pair with exact 3-gram-shingle Jaccard ≥ `threshold`

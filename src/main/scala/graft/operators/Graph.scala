@@ -34,7 +34,7 @@ object Graph {
     * body — every iterated gate ran this same set/try/finally inline; one
     * helper keeps the width consistent with the persisted artifacts, whose
     * co-partitioning the loops rely on. */
-  private[graft] def withGatePartitions[T](s: SparkSession)(body: => T): T = {
+  private def withGatePartitions[T](s: SparkSession)(body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", GatePartitions.toString)
     try body
@@ -213,8 +213,7 @@ object Graph {
     * lose the tail node's entire rank. */
   def pageRankDirected(edges: DataFrame, iters: Int = 5,
                        damping: Double = 0.85,
-                       checkpointEvery: Int = 2,
-                       finalCut: Boolean = true): DataFrame = {
+                       checkpointEvery: Int = 2): DataFrame = {
     val teleport = Iterative.teleport(damping)
     val e = edges.select(col("src"), col("dst"), col("w").cast("double").as("w"))
     // out-degree table: nodes with NO out-edges are the dangling set —
@@ -264,31 +263,11 @@ object Graph {
     // release them — per-call persists must not accumulate in storage
     // memory across repeated invocations (unlike the memoized artifact
     // caches, these frames have no session-level eviction hook).
-    // finalCut=false is the PlanDump path ONLY: it leaves the last
-    // iteration's body visible so the dumped plan shows the repeated unit
-    // instead of a post-checkpoint ExistingRDD stub (never used by a
-    // registered query — the cut is load-bearing there).
-    val out0 = ranks.select(col("node"), col("rank"))
-    val out = if (finalCut) Iterative.cutLineage(out0) else out0
-    if (finalCut) { norm.unpersist(); nodes.unpersist() }
+    val out = Iterative.cutLineage(ranks.select(col("node"), col("rank")))
+    norm.unpersist(); nodes.unpersist()
     out
   }
 
-  /** [[pageRankDirected]] AS a correctness-gate query (the `q_ann_recall`
-    * bound pattern, round-7 VERDICT ask #3): a deterministic directed
-    * weighted graph derived from `nation` — chain 0→1→…→24 (w=1) plus
-    * weighted hub in-edges 5..9→0 (w=2) — exercises every branch the
-    * undirected fast path skips: weighted out-degree normalization
-    * (nodes 5..9 split 1/3 vs 2/3), a multi-in-degree hub (node 0), a
-    * zero-in-degree source resurrected by the left join (none after hub
-    * edges — node 0 receives; the chain head still starts teleport-only),
-    * and a dangling tail (node 24, no out-edges) whose mass the
-    * redistribution term must conserve. The DuckDB oracle recomputes the
-    * same 5 power iterations unrolled arithmetically (the `q_pagerank`
-    * oracle pattern + a dangling-mass CTE per iteration); ranks compare in
-    * integer ppm. `mass_ok` pins Σrank = 1 (the property the dangling
-    * correction exists to preserve) as an in-bound flag the oracle fixes
-    * at 1. */
   /** `q_pagerank` gate wrapper: every iteration exchange moves the |V|-row
     * ranks frame (~15k rows at sf0.1), so the gate executes the loop under
     * state-sized shuffle partitions (8, the drainGate convention) and
@@ -301,35 +280,56 @@ object Graph {
   def pageRankGate(s: SparkSession, d: String): DataFrame =
     withGatePartitions(s) { pageRank(s, d).localCheckpoint(true) }
 
-  // state-sized shuffle partitions for the 25-node loop (the
-  // [[pageRankGate]] sizing, measured 3.7-6.3 s @32 vs 2.5-2.7 s @8 at
-  // sf0.1): the per-iteration cuts execute inside this scope, so the
-  // conf applies to them as well as the final assembly
+  /** [[pageRankDirected]] AS a correctness-gate query (the `q_ann_recall`
+    * bound pattern, round-7 VERDICT ask #3): a deterministic directed
+    * weighted graph derived from `nation` — chain 0→1→…→24 (w=1) plus
+    * weighted hub in-edges 5..9→0 (w=2) — exercises every branch the
+    * undirected fast path skips: weighted out-degree normalization
+    * (nodes 5..9 split 1/3 vs 2/3), a multi-in-degree hub (node 0, which
+    * is also the chain head, so no node has zero in-degree), and a
+    * dangling tail (node 24, no out-edges) whose mass the
+    * redistribution term must conserve. The DuckDB oracle recomputes the
+    * same 5 power iterations unrolled arithmetically (the `q_pagerank`
+    * oracle pattern + a dangling-mass CTE per iteration); ranks compare in
+    * integer ppm. `mass_ok` pins Σrank = 1 (the property the dangling
+    * correction exists to preserve) as an in-bound flag the oracle fixes
+    * at 1. State-sized shuffle partitions for the 25-node loop (the
+    * [[pageRankGate]] sizing, measured 3.7-6.3 s @32 vs 2.5-2.7 s @8 at
+    * sf0.1): the per-iteration cuts execute inside this scope, so the
+    * conf applies to them as well as the final assembly. */
   def pageRankDirectedGate(s: SparkSession, d: String): DataFrame =
-    withGatePartitions(s) { pageRankDirectedGateBody(s, d).localCheckpoint(true) }
+    withGatePartitions(s) {
+      // checkpointEvery = 1: each directed iteration references the previous
+      // ranks frame from TWO branches (the contribution join and the
+      // dangling-mass broadcast), so uncut lineage re-derives leaves ~3^i
+      // times — measured 22.6 s for 5 iterations on this 25-node graph with
+      // cuts disabled vs ~2 s cutting every iteration (the default
+      // every-2 cadence, one uncut doubling per pair, measured 4.0 s).
+      // Large-graph runs amortize differently (each cut materializes |V|
+      // rows); at 25 nodes the cut is the cheap side of the trade.
+      gatePayload(pageRankDirected(nationGraph(s, d), iters = 5,
+        checkpointEvery = 1))
+    }
 
-  private[graft] def pageRankDirectedGateBody(s: SparkSession, d: String,
-                                              finalCut: Boolean = true): DataFrame = {
+  /** The directed graph both nation-derived gates run on: chain
+    * 0→1→…→24 (w=1) plus weighted hub in-edges 5..9→0 (w=2). */
+  private def nationGraph(s: SparkSession, d: String): DataFrame = {
     val n = Tables.nation(s, d).select(col("n_nationkey").cast("int").as("k"))
-    val chain = n.filter(col("k") < 24)
+    n.filter(col("k") < 24)
       .select(col("k").as("src"), (col("k") + 1).as("dst"), lit(1.0).as("w"))
-    val hub = n.filter(col("k").between(5, 9))
-      .select(col("k").as("src"), lit(0).as("dst"), lit(2.0).as("w"))
-    // checkpointEvery = 1: each directed iteration references the previous
-    // ranks frame from TWO branches (the contribution join and the
-    // dangling-mass broadcast), so uncut lineage re-derives leaves ~3^i
-    // times — measured 22.6 s for 5 iterations on this 25-node graph with
-    // cuts disabled vs ~2 s cutting every iteration (the default
-    // every-2 cadence, one uncut doubling per pair, measured 4.0 s).
-    // Large-graph runs amortize differently (each cut materializes |V|
-    // rows); at 25 nodes the cut is the cheap side of the trade.
-    val ranks = pageRankDirected(chain.unionByName(hub), iters = 5,
-      checkpointEvery = 1, finalCut = finalCut)
+      .unionByName(n.filter(col("k").between(5, 9))
+        .select(col("k").as("src"), lit(0).as("dst"), lit(2.0).as("w")))
+  }
+
+  /** (node, rank_ppm, mass_ok) of a nation gate's ranks, materialized:
+    * integer ppm ranks and the Σrank = 1 flag the oracle fixes at 1. */
+  private def gatePayload(ranks: DataFrame): DataFrame = {
     val mass = ranks.agg(sum(col("rank")).as("m"))
     ranks.crossJoin(broadcast(mass))
       .select(col("node").cast("int").as("node"),
         round(col("rank") * 1e6, 0).cast("long").as("rank_ppm"),
         (abs(col("m") - lit(1.0)) < lit(1e-9)).cast("int").as("mass_ok"))
+      .localCheckpoint(true)
   }
 
   /** Personalized PageRank: the teleport vector concentrates on a SEED SET
@@ -350,8 +350,7 @@ object Graph {
     * contribution join + two broadcast 1-row/|S|-row aggregates. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int = 5,
                            damping: Double = 0.85,
-                           checkpointEvery: Int = 2,
-                           finalCut: Boolean = true): DataFrame = {
+                           checkpointEvery: Int = 2): DataFrame = {
     val teleport = Iterative.teleport(damping)
     val e = edges.select(col("src"), col("dst"), col("w").cast("double").as("w"))
     // normalize by seeds ∩ nodes, not the raw seed list: a seed absent from
@@ -406,10 +405,9 @@ object Graph {
               + col("dmass") * col("s"))).as("rank"))
       if (i % checkpointEvery == 0 && i < iters) ranks = Iterative.cutLineage(ranks)
     }
-    // finalCut=false: PlanDump-only, see [[pageRankDirected]]
-    val out0 = ranks.select(col("node"), col("rank"))
-    val out = if (finalCut) Iterative.cutLineage(out0) else out0
-    if (finalCut) { norm.unpersist(); nodes.unpersist(); nodeIds.unpersist() }
+    // cut, then release the helper frames — see [[pageRankDirected]]
+    val out = Iterative.cutLineage(ranks.select(col("node"), col("rank")))
+    norm.unpersist(); nodes.unpersist(); nodeIds.unpersist()
     out
   }
 
@@ -423,24 +421,12 @@ object Graph {
     * floor. Oracle unrolls the identical 5 iterations; mass_ok pins
     * Σrank = 1. */
   def pprGate(s: SparkSession, d: String): DataFrame =
-    withGatePartitions(s) { pprGateBody(s, d).localCheckpoint(true) }
-
-  private[graft] def pprGateBody(s: SparkSession, d: String,
-                                 finalCut: Boolean = true): DataFrame = {
-    val n = Tables.nation(s, d).select(col("n_nationkey").cast("int").as("k"))
-    val chain = n.filter(col("k") < 24)
-      .select(col("k").as("src"), (col("k") + 1).as("dst"), lit(1.0).as("w"))
-    val hub = n.filter(col("k").between(5, 9))
-      .select(col("k").as("src"), lit(0).as("dst"), lit(2.0).as("w"))
-    val seeds = n.filter(col("k") % 12 === 0).select(col("k").as("node"))
-    val ranks = personalizedPageRank(chain.unionByName(hub), seeds,
-      iters = 5, checkpointEvery = 1, finalCut = finalCut)
-    val mass = ranks.agg(sum(col("rank")).as("m"))
-    ranks.crossJoin(broadcast(mass))
-      .select(col("node").cast("int").as("node"),
-        round(col("rank") * 1e6, 0).cast("long").as("rank_ppm"),
-        (abs(col("m") - lit(1.0)) < lit(1e-9)).cast("int").as("mass_ok"))
-  }
+    withGatePartitions(s) {
+      val seeds = Tables.nation(s, d).filter(col("n_nationkey") % 12 === 0)
+        .select(col("n_nationkey").cast("int").as("node"))
+      gatePayload(personalizedPageRank(nationGraph(s, d), seeds,
+        iters = 5, checkpointEvery = 1))
+    }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR
     * contraction — the O(log² n)-round web-scale algorithm (Kiveris,
@@ -1016,54 +1002,4 @@ object Graph {
     degrees.groupBy(col("side"), col("degree"))
       .agg(count(lit(1)).as("n_nodes"))
   }
-
-  // ------------------------------------------------ plan-evidence accessors
-
-  /** Pre-checkpoint frames for [[graft.PlanDump]] ONLY (round-18 verdict
-    * #8): the registered gates materialize via `localCheckpoint`, so their
-    * dumped plans are vacuous `Scan ExistingRDD` stubs. These rebuild the
-    * SAME frame without the final cut, under the gate's shuffle-partition
-    * scope — and for loops that cut per iteration, the visible plan is the
-    * LAST iteration's body, i.e. the repeated unit any per-iteration plan
-    * claim is about. Never registered as queries; evidence only. */
-  private[graft] def pageRankPlan(s: SparkSession, d: String): DataFrame =
-    withGatePartitions(s) { pageRank(s, d) }
-
-  private[graft] def pageRankDirectedPlan(s: SparkSession, d: String): DataFrame =
-    withGatePartitions(s) { pageRankDirectedGateBody(s, d, finalCut = false) }
-
-  private[graft] def pprPlan(s: SparkSession, d: String): DataFrame =
-    withGatePartitions(s) { pprGateBody(s, d, finalCut = false) }
-
-  /** One large-star + small-star contraction round over the canonicalized
-    * `q_cc_star` input — [[connectedComponentsStar]] cuts and probes every
-    * round, so no multi-round plan exists to dump; this is the round body. */
-  private[graft] def ccStarRoundPlan(s: SparkSession, d: String): DataFrame =
-    withGatePartitions(s) {
-      val e = Iterative.cutLineage(Dedup.ccPairArtifact(s, d)
-        .select(greatest(col("doc_a"), col("doc_b")).as("child"),
-          least(col("doc_a"), col("doc_b")).as("parent"))
-        .filter(col("child") =!= col("parent"))
-        .distinct())
-      val sym = e.select(col("child").as("u"), col("parent").as("v"))
-        .unionAll(e.select(col("parent").as("u"), col("child").as("v")))
-      val mins = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val large = sym.join(mins, Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("child"), col("m").as("parent"))
-        .distinct()
-      val pMin = large.groupBy(col("child")).agg(min(col("parent")).as("m"))
-      large.join(pMin, Seq("child"))
-        .filter(col("parent") =!= col("m"))
-        .select(col("parent").as("child"), col("m").as("parent"))
-        .unionAll(pMin.select(col("child"), col("m").as("parent")))
-        .distinct()
-    }
-
-  private[graft] def modularityPlan(s: SparkSession, d: String): DataFrame =
-    withGatePartitions(s) {
-      val pairs = Dedup.triPairArtifact(s, d)
-      modularity(pairs, labelPropagation(pairs))
-    }
 }

@@ -352,13 +352,6 @@ object IvfIndex {
         graft.streaming.EventsStream.deleteRecursively(base.toFile)
     }
 
-  /** Registered query: quantized two-stage IVF top-5 for the first 5 vectors
-    * (rows-only — model + sketch state; recall pinned in IvfStreamSpec). */
-  def annIvfQuantized(s: SparkSession, d: String): DataFrame = {
-    val (assigned, centroids) = index(s, d)
-    ivfTopKQuantized(Tables.embeddings(s, d).filter(col("vec_id") < 5), assigned, centroids, 5)
-  }
-
   /** Index build is a SEPARATE stage from probing — the at-scale shape: the
     * quantizer is trained and vectors assigned ONCE (a batch index build),
     * then every query is probe-only. Here the built index is memoized per

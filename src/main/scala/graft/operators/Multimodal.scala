@@ -104,17 +104,6 @@ object Multimodal {
     }
   }
 
-  /** Rows-only summary over the legacy stub kernel (kept for the batch-
-    * contract spec; the REAL decode path is [[imageFeatures]] /
-    * [[imageDecodeQuery]], which is what `q_multimodal_features` runs). */
-  def stubFeatureSummary(s: SparkSession, d: String): DataFrame =
-    fakeDecodeFeatures(assets(s, d)).select(
-      col("asset_id"),
-      col("meta.n_bytes").as("n_bytes"),
-      col("meta.origin").as("origin"),
-      round(expr("aggregate(features, 0D, (a, x) -> a + x)"), 4).as("feature_sum"),
-      col("decoder"))
-
   // ---- real decode path (javax.imageio, hermetic) --------------------------
 
   /** Deterministic synthetic PNG: a solid-RGB image whose color and

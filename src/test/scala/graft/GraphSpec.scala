@@ -79,6 +79,24 @@ class GraphSpec extends SparkSpec {
     assert(math.abs(got.values.sum - 1.0) < 1e-9, "restart mass conserved")
   }
 
+  test("directed and personalized pagerank gates pin their exact payloads") {
+    def payload(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).sortBy(_._1).toSeq
+    val directed = Seq(63706L, 61122L, 60114L, 64220L, 86808L, 45395L, 20142L,
+      13138L, 11201L, 10668L, 10522L, 16536L, 21857L, 27058L, 33563L) ++
+      Seq.fill(10)(45395L)
+    // seeds {0, 12, 24}: five steps reach at most five chain nodes past a
+    // seed, so 6..11 and 18..23 sit on the exact-zero floor
+    val ppr = Seq(70249L, 60746L, 54738L, 55840L, 75401L, 147902L) ++
+      Seq.fill(6)(0L) ++ Seq(70249L, 60746L, 54738L, 55840L, 75401L, 147902L) ++
+      Seq.fill(6)(0L) :+ 70249L
+    for ((name, gate, ranks) <- Seq(
+        ("q_pagerank_directed", Graph.pageRankDirectedGate _, directed),
+        ("q_ppr", Graph.pprGate _, ppr)))
+      assert(payload(gate(spark, sf)) ===
+        ranks.zipWithIndex.map { case (ppm, node) => (node, ppm, 1) }, name)
+  }
+
   test("lineage cut keeps the iterated plan bounded") {
     // 20 iterations with checkpointEvery=2 must not blow the plan budget —
     // the point of the periodic cut; completing quickly IS the assertion

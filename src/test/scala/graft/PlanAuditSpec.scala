@@ -4,8 +4,7 @@ package graft
   * query, the physical plan that IS the feature — the broadcast that keeps
   * a 100 TB fact from shuffling for a dimension, the WindowGroupLimit that
   * caps a shuffle at k rows per group, the filter that reaches the parquet
-  * scan before a row-multiplying explode. Until round 12 those claims were
-  * manually re-audited each round (`PlanAuditMain`); this spec pins the
+  * scan before a row-multiplying explode. This spec pins the
   * load-bearing ones so a plan regression (a lost hint, a rewrite rule no
   * longer firing, an operator reordered behind the explode) fails the suite
   * instead of surfacing as a 100× scale-up surprise.
